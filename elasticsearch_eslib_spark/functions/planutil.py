@@ -1,13 +1,22 @@
-"""Plan-shaping utilities (optimizer barriers).
+"""Plan-shaping utilities: driver rows as local relations, optimizer
+barriers, and the scan-parallelism probe.
 
-Catalyst folds a deterministic filter over a two-sided computed column
-into the JOIN CONDITION (PushPredicateThroughJoin): the expensive
-expression (a 64-dim cosine, an array_intersect jaccard) is then
-evaluated per CANDIDATE pair inside the join — outside the stage's
-generated code — and evaluated AGAIN in the projection for every
-surviving pair. Measured on the near-dup pair join at sf1.0: the pair
-stage alone ran 28.0 s with the fold vs 6.6 s with the filter held above
-a codegen'd projection.
+`local_frame` is the one way driver-side rows become a DataFrame. It
+builds a pyarrow Table and hands it to Spark, which plans it as a
+`LocalTableScan`: the rows live in the plan, and reading them runs no
+Python worker. `createDataFrame(<list of tuples>)` instead backs the frame
+with a parallelized Python RDD (`Scan ExistingRDD`, one Python task per
+slice on every job that reads it), and a pandas frame takes that same
+path whenever it is empty.
+
+Optimizer barrier. Catalyst folds a deterministic filter over a two-
+sided computed column into the JOIN CONDITION
+(PushPredicateThroughJoin): the expensive expression (a 64-dim cosine,
+an array_intersect jaccard) is then evaluated per CANDIDATE pair inside
+the join — outside the stage's generated code — and evaluated AGAIN in
+the projection for every surviving pair. Measured on the near-dup pair
+join at sf1.0: the pair stage alone ran 28.0 s with the fold vs 6.6 s
+with the filter held above a codegen'd projection.
 
 `filter_once` pins the filter ABOVE the projection that computes its
 inputs, so the expensive column is evaluated exactly once, inside
@@ -32,7 +41,10 @@ interpreted path — also measured, 13 s vs 7 s on the same stage).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from collections.abc import Iterable
+
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql import types as T
 
 _BARRIER_COL = "__nd_barrier"
 
@@ -50,6 +62,33 @@ def conf_bytes(spark, key: str) -> int:
         if v.endswith(suf) and v[: -len(suf)].strip().isdigit():
             return int(v[: -len(suf)].strip()) * _BYTE_UNITS[suf]
     return int(v)
+
+
+def local_frame(spark: SparkSession, rows: Iterable[tuple],
+                schema: T.StructType | str) -> DataFrame:
+    """`rows` (tuples in `schema` column order) as a DataFrame that plans as
+    a `LocalTableScan`, empty or not. `schema` is a StructType or a DDL
+    string; timestamps are `timestamp("us", tz="UTC")`, and a naive
+    datetime is local wall time, as `createDataFrame` reads it.
+
+    Datetimes are converted to UTC here because pyarrow stores an aware
+    datetime's wall time, dropping its UTC offset."""
+    import datetime as dt
+
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    arrays = []
+    for col, field in zip(list(zip(*rows)) or [()] * len(arrow), arrow):
+        if pa.types.is_timestamp(field.type):
+            col = [None if v is None else v.astimezone(dt.timezone.utc)
+                   for v in col]
+        arrays.append(pa.array(col, type=field.type))
+    return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=arrow),
+                                 schema)
 
 
 def spread(df: DataFrame, by: str = "doc_id") -> DataFrame:

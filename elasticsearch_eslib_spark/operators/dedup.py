@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from elasticsearch_eslib_spark.functions.hashing import md5_long, md5_long_seeded
+from elasticsearch_eslib_spark.functions.planutil import local_frame
 from elasticsearch_eslib_spark.operators.fulltext import load_documents
 
 N_MINHASH = 8          # minhash fns (universal-hash affine permutations)
@@ -285,8 +286,8 @@ def lsh_candidate_pairs(sigs: DataFrame,
                  .select("band", "bucket", "min_doc"))
     over_rows = over_plan.limit(_MAX_OVER_DRIVER + 1).collect()
     if len(over_rows) <= _MAX_OVER_DRIVER:
-        over = sigs.sparkSession.createDataFrame(
-            over_rows, "band int, bucket long, min_doc long")
+        over = local_frame(sigs.sparkSession, over_rows,
+                           "band int, bucket long, min_doc long")
     else:  # pathological: keep the detection distributed
         over = over_plan
     small = banded.join(F.broadcast(over.select("band", "bucket")),
@@ -530,8 +531,7 @@ def simhash_pairs_of(sig: DataFrame,
     if not over_rows:
         cand = _pairs(banded, banded, "band", "v").distinct()
     else:
-        over = (sig.sparkSession.createDataFrame(
-                    over_rows, "band int, v long")
+        over = (local_frame(sig.sparkSession, over_rows, "band int, v long")
                 if len(over_rows) <= _MAX_OVER_DRIVER else over_plan)
         # small buckets: plain within-bucket pairing (bounded by the cap)
         small = (banded.join(F.broadcast(over), ["band", "v"], "left_anti")

@@ -16,6 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from elasticsearch_eslib_spark.functions.planutil import local_frame
 from elasticsearch_eslib_spark.operators.fulltext import (
     load_documents, tokenize_tf,
 )
@@ -40,13 +41,13 @@ SCRUB_PATTERN = r"\bs[a-z]*\b"   # pinned demo pattern: drop s-words
 
 def extract_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, entity, category, n_matches) for the pinned dictionary."""
-    uni = spark.createDataFrame(UNIGRAM_ENTITIES, "entity string, category string")
+    uni = local_frame(spark, UNIGRAM_ENTITIES, "entity string, category string")
     tf = tokenize_tf(spark, sf_dir)
     uni_hits = (tf.join(F.broadcast(uni), tf["term"] == uni["entity"])
                 .select("doc_id", "entity", "category",
                         F.col("tf").cast("long").alias("n_matches")))
 
-    bi = spark.createDataFrame(BIGRAM_ENTITIES, "entity string, category string")
+    bi = local_frame(spark, BIGRAM_ENTITIES, "entity string, category string")
     docs = load_documents(spark, sf_dir)
     toks_col = F.filter(F.split("text", " "), lambda x: x != F.lit(""))
     base = (docs.select("doc_id", toks_col.alias("toks"))

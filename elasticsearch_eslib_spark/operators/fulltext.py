@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from elasticsearch_eslib_spark.config import BM25_B, BM25_K1
-from elasticsearch_eslib_spark.functions.planutil import spread
+from elasticsearch_eslib_spark.functions.planutil import local_frame, spread
 
 # Pinned query set over the documents vocabulary (~31 terms at every sf).
 FULLTEXT_QUERIES: list[tuple[int, str]] = [
@@ -103,7 +103,7 @@ def _query_terms_df(spark: SparkSession) -> DataFrame:
     for qid, q in FULLTEXT_QUERIES:
         for term in sorted(set(q.split())):
             rows.append((qid, term))
-    return spark.createDataFrame(rows, "query_id long, term string")
+    return local_frame(spark, rows, "query_id long, term string")
 
 
 def bm25_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -119,17 +119,22 @@ def bm25_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         explode, no shuffle; identical values, see doc_len);
       * the exploded stream is filtered to the query terms at the map side,
         so the (doc_id, term) groupBy shuffles only matching rows;
-      * df per query term is a COUNT WINDOW over that same filtered tf
-        frame (df = rows sharing the term), so the explode subtree exists
-        once in the plan — a separate groupBy(term) re-aggregation
-        re-planned (and re-ran) the whole explode lineage as a second
-        subtree; the window costs one small exchange of the filtered
-        rows instead.
+      * df per query term is `groupBy(term).count()` over that same
+        filtered tf frame, broadcast back into it. The count is partial
+        per task before its exchange, so no task ever holds one term's
+        whole posting stream (a count window partitioned by term did).
+        Both branches read the one reused doc_id exchange; the df branch
+        re-runs the explode behind it, which measured no slower than the
+        window (200k docs, local[4] on 4 cores: 8.3-9.6 s vs 8.6-9.7 s).
 
     Scores are unchanged: the same (tf, df, dl, N, avgdl) numbers feed the
     same formula (avg_dl is an exact long-sum average, so not even a float
     ulp moves); only summation order inside the final groupBy can differ,
-    which the pinned round(score, 6) already absorbs."""
+    which the pinned round(score, 6) already absorbs.
+
+    An empty corpus (no document with a token) scores nothing: avg_dl is
+    then NULL, but no (doc, term) row exists to carry it into a score, so
+    the result is empty rather than NULL-scored."""
     docs = load_documents(spark, sf_dir)
     q = _query_terms_df(spark)
     all_qterms = sorted({t for _, qq in FULLTEXT_QUERIES for t in qq.split()})
@@ -156,8 +161,8 @@ def bm25_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
             .where(F.col("term").isin(all_qterms))
             .groupBy("doc_id", "dl", "term")  # dl is per-doc constant:
             .agg(F.count("*").alias("tf")))   # same groups as (doc_id, term)
-    w_term = Window.partitionBy("term")
-    scored = (tf_q.withColumn("df", F.count("*").over(w_term))
+    df_q = tf_q.groupBy("term").agg(F.count("*").alias("df"))
+    scored = (tf_q.join(F.broadcast(df_q), "term")
               .join(F.broadcast(q), "term")
               .crossJoin(F.broadcast(stats))
               .withColumn("idf", F.log(

@@ -10,11 +10,18 @@ self-check required by SURVEY.md Q5 and tested in test_bm25_topk.py):
     block-max metadata skips blocks, survivors are fully evaluated with
     contributions summed in term_id order (pinned float64 determinism).
 
-Scale notes: query-term lists are tiny (collected to the driver only to
-build an `isin` predicate that prunes the postings scan down to a few
-parquet partitions/row-groups — p_bucket directory pruning + term_id
-min/max stats). Scoring needs no join against the docs table because
-doc_len is packed inside each block (see build.py).
+Query frame invariant: the caller's query frame is read exactly once, by
+the collect in `analyze_queries`. From there the query terms and their
+resolved vocabulary rows are driver-side local relations
+(`planutil.local_frame`, planned as `LocalTableScan`), so the query job
+runs no Python except the work itself: the WAND `applyInPandas`
+(`topk_wand`) or the block-decode `mapInPandas` (`topk_exhaustive`).
+Queries are driver-sized by construction: their terms are collected to
+build an `isin` predicate that prunes the postings scan to a few parquet
+partitions/row-groups (p_bucket directory pruning + term_id min/max
+stats), and the resolved frame is broadcast. Scoring needs no join
+against the docs table because doc_len is packed inside each block (see
+build.py).
 """
 
 from __future__ import annotations
@@ -29,6 +36,7 @@ from elasticsearch_eslib_spark import schemas
 from elasticsearch_eslib_spark.config import BM25_B, BM25_K1
 from elasticsearch_eslib_spark.functions.analyze import analyze_text
 from elasticsearch_eslib_spark.functions.codec import decode_posting_block
+from elasticsearch_eslib_spark.functions.planutil import local_frame
 
 N_POSTING_BUCKETS = 32  # p_bucket = term_id % N_POSTING_BUCKETS (write + prune)
 
@@ -36,40 +44,36 @@ N_POSTING_BUCKETS = 32  # p_bucket = term_id % N_POSTING_BUCKETS (write + prune)
 def analyze_queries(queries: DataFrame) -> DataFrame:
     """Q1: (query_id, query, k) → (query_id, k, term) distinct terms.
 
-    Queries are analyzed with lang='en' (pinned, FIXTURES.md §2); duplicate
-    query terms contribute once (pinned semantic, oracle.py).
-    """
-
-    def _an(iterator):
-        for pdf in iterator:
-            rows = {"query_id": [], "k": [], "term": []}
-            for qid, q, k in zip(pdf["query_id"], pdf["query"], pdf["k"]):
-                for term in sorted(set(analyze_text(q, "en"))):
-                    rows["query_id"].append(qid)
-                    rows["k"].append(k)
-                    rows["term"].append(term)
-            yield pd.DataFrame(rows)
-
-    return queries.mapInPandas(_an, schema="query_id long, k int, term string")
+    Reads `queries` once (one collect) and analyzes on the driver, as the
+    oracle does; the result is a local relation, so nothing downstream
+    reads `queries` again. Queries are analyzed with lang='en' (pinned,
+    FIXTURES.md §2); duplicate query terms contribute once (pinned
+    semantic, oracle.py)."""
+    rows = [(r["query_id"], r["k"], term)
+            for r in queries.select("query_id", "query", "k").collect()
+            for term in sorted(set(analyze_text(r["query"], "en")))]
+    return local_frame(queries.sparkSession, rows,
+                       "query_id long, k int, term string")
 
 
 def resolve_query_terms(qterms: DataFrame, terms: DataFrame,
                         n_docs: int) -> DataFrame:
     """Q2: attach term_id/df/idf. Unknown terms drop out (inner join).
 
-    The matched vocabulary rows (≤ #query terms — driver metadata, like
-    the term list itself) are collected once and re-broadcast as a local
-    relation: downstream consumers (fetch_postings' prune list, the WAND
-    fan-out rule keyed on max df) read them straight off the returned
-    DataFrame's `_resolved_term_ids` / `_resolved_max_df` instead of each
-    paying another action that would re-run the analyze+join pipeline."""
-    spark = qterms.sparkSession
-    term_list = [r["term"] for r in qterms.select("term").distinct().collect()]
+    The query terms are collected (free for `analyze_queries`' local
+    relation) to build a pushed-down `isin` scan of the vocabulary; the
+    matched rows (≤ #query terms) come back as a second local relation,
+    broadcast into the join; idf is computed there, in the JVM.
+    Downstream consumers (fetch_postings' prune list, the
+    WAND fan-out rule keyed on max df) read the matched rows straight off
+    the returned DataFrame's `_resolved_term_ids` / `_resolved_max_df`
+    instead of paying another action."""
+    term_list = sorted({r["term"] for r in qterms.select("term").collect()})
     matched_rows = (terms.where(F.col("term").isin(term_list))
                     .select("term", "term_id", "df").collect()
                     if term_list else [])
-    matched = spark.createDataFrame(
-        matched_rows, "term string, term_id long, df long")
+    matched = local_frame(qterms.sparkSession, matched_rows,
+                          "term string, term_id long, df long")
     resolved = (qterms.join(F.broadcast(matched), "term")
                 .withColumn("idf", F.log(
                     (F.lit(float(n_docs)) - F.col("df") + 0.5)

@@ -68,7 +68,9 @@ from elasticsearch_eslib_spark.operators.ids import (
     assign_dense_ids, unpersist_ids,
 )
 from elasticsearch_eslib_spark.operators.query import N_POSTING_BUCKETS
-from elasticsearch_eslib_spark.plans.build_index import committed_epochs
+from elasticsearch_eslib_spark.plans.build_index import (
+    committed_epochs, stats_frame,
+)
 from elasticsearch_eslib_spark.sources.tableio import (
     fingerprint_path, open_tableio,
 )
@@ -262,7 +264,6 @@ def append_index(spark: SparkSession, pages_path: str,
     st5 = f"stats{sfx}"
     s5_fp = s4_fp + ":" + io.stage_snapshot(st4)
     if not io.is_done(st5, s5_fp):
-        import datetime as _dt
         import uuid as _uuid
 
         # roll the per-term block counts forward (vocab-sized, like terms):
@@ -290,11 +291,7 @@ def append_index(spark: SparkSession, pages_path: str,
         bound = min(bound_prev, avgdl_tot) if n_tot else avgdl_tot
         io.commit_stage(
             st5, st5,
-            spark.createDataFrame(
-                [(n_tot, avgdl_tot, bound,
-                  _dt.datetime.now(_dt.timezone.utc), snapshot)],
-                "n_docs long, avg_dl double, bound_avgdl double, "
-                "built_at timestamp, snapshot string"),
+            stats_frame(spark, n_tot, avgdl_tot, bound, snapshot),
             s5_fp, snapshot=snapshot,
             metrics={"batch_fingerprint": fp_batch, "n_new": n_new,
                      "n_docs": n_tot, "avg_dl": avgdl_tot,

@@ -22,6 +22,7 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from elasticsearch_eslib_spark.functions.planutil import local_frame
 from elasticsearch_eslib_spark.operators.build import (
     assign_doc_ids, build_postings, build_terms,
     extract_analyze_tf, term_freqs, term_freqs_nodoc,
@@ -33,6 +34,7 @@ from elasticsearch_eslib_spark.sources.tableio import (
 )
 
 N_INPUT_BUCKETS = 32
+
 # Commit groups trade resume granularity (buckets per checkpoint commit)
 # against per-job fixed overhead. The default is ADAPTIVE: one commit
 # group per ~this many input bytes (clamped to [1, 8]) — a small corpus
@@ -44,6 +46,18 @@ COMMIT_GROUP_BYTES = 512 << 20
 
 class BuildError(RuntimeError):
     pass
+
+
+def stats_frame(spark: SparkSession, n_docs: int, avg_dl: float,
+                bound_avgdl: float, snapshot: str) -> DataFrame:
+    """The one-row stats table (schemas.STATS columns), stamped now."""
+    import datetime as dt
+
+    return local_frame(
+        spark, [(n_docs, avg_dl, bound_avgdl,
+                 dt.datetime.now(dt.timezone.utc), snapshot)],
+        "n_docs long, avg_dl double, bound_avgdl double, "
+        "built_at timestamp, snapshot string")
 
 
 def _dir_bytes(path: str) -> tuple[int, int]:
@@ -269,15 +283,11 @@ def build_index(spark: SparkSession, pages_path: str, index_dir: str,
                        .agg((F.max("block_id") + 1).cast("int")
                             .alias("n_blocks")))
         # stats carries the snapshot id it belongs to (schemas.STATS)
-        import datetime as _dt
         import uuid as _uuid2
 
         snapshot = _uuid2.uuid4().hex[:26]
-        io.write_table("stats", spark.createDataFrame(
-            [(n_docs, avg_dl, avg_dl,
-              _dt.datetime.now(_dt.timezone.utc), snapshot)],
-            "n_docs long, avg_dl double, bound_avgdl double, "
-            "built_at timestamp, snapshot string"))
+        io.write_table("stats",
+                       stats_frame(spark, n_docs, avg_dl, avg_dl, snapshot))
         io.commit_stage("postings", "postings", None, s4_fp,
                         snapshot=snapshot,
                         metrics={"n_docs": n_docs, "avg_dl": avg_dl,

@@ -37,7 +37,9 @@ from elasticsearch_eslib_spark.operators.build import encode_enriched
 from elasticsearch_eslib_spark.operators.query import (
     N_POSTING_BUCKETS, decode_blocks,
 )
-from elasticsearch_eslib_spark.plans.build_index import Index, committed_epochs
+from elasticsearch_eslib_spark.plans.build_index import (
+    Index, committed_epochs, stats_frame,
+)
 from elasticsearch_eslib_spark.sources.tableio import (
     _utcnow_iso, open_tableio,
 )
@@ -115,7 +117,6 @@ def compact_index(spark: SparkSession, src_dir: str, dst_dir: str,
                     .agg((F.max("block_id") + 1).cast("int")
                          .alias("n_blocks")))
 
-    import datetime as _dt
     import uuid as _uuid
 
     if pre_commit_hook is not None:
@@ -128,11 +129,8 @@ def compact_index(spark: SparkSession, src_dir: str, dst_dir: str,
     snapshot = _uuid.uuid4().hex[:26]
     # bound_avgdl == avg_dl again: every block re-encoded under the
     # current stats — the WAND drift factor is exactly 1 post-compaction
-    out.write_table("stats", spark.createDataFrame(
-        [(n_docs, avg_dl, avg_dl,
-          _dt.datetime.now(_dt.timezone.utc), snapshot)],
-        "n_docs long, avg_dl double, bound_avgdl double, "
-        "built_at timestamp, snapshot string"))
+    out.write_table("stats",
+                    stats_frame(spark, n_docs, avg_dl, avg_dl, snapshot))
     out.commit_stage("postings", "postings", None, fp, snapshot=snapshot,
                      metrics={"n_docs": n_docs, "avg_dl": avg_dl,
                               "max_doc_id": max_doc_id,
@@ -327,14 +325,9 @@ def compact_epochs(spark: SparkSession, index_dir: str,
                         .cast("int").alias("n_blocks")))
     _raw_write(names["block_offs"], new_offs)
 
-    import datetime as _dt
-
     snapshot = _uuid.uuid4().hex[:26]
-    _raw_write(names["stats"], spark.createDataFrame(
-        [(n_tot, avgdl_tot, bound_new,
-          _dt.datetime.now(_dt.timezone.utc), snapshot)],
-        "n_docs long, avg_dl double, bound_avgdl double, "
-        "built_at timestamp, snapshot string"))
+    _raw_write(names["stats"],
+               stats_frame(spark, n_tot, avgdl_tot, bound_new, snapshot))
 
     max_doc_id = int(io.stage_metrics(f"stats_a{k}").get("max_doc_id", 0))
     n_new_merged = n_new_suffix  # already summed for the encode sizing

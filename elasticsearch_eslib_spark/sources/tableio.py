@@ -35,6 +35,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from elasticsearch_eslib_spark.functions.planutil import local_frame
+
 
 def _utcnow_iso() -> str:
     """Microsecond-precision UTC timestamp. Sub-second precision makes the
@@ -261,7 +263,7 @@ class ManifestTableIO:
             int(r.get("attempt", 1)),
             _parse_iso(r.get("updated", "")),
         ) for r in rows]
-        return self.spark.createDataFrame(norm, schemas.LINEAGE)
+        return local_frame(self.spark, norm, schemas.LINEAGE)
 
     def write_table(self, name: str, df: DataFrame,
                     partition_by: list[str] | None = None) -> None:
@@ -475,9 +477,10 @@ class IcebergTableIO:
             snapshot = self._last_snapshot_id(table) or uuid.uuid4().hex[:26]
         row = [(stage, "done", table, str(snapshot), input_fingerprint,
                 json.dumps(metrics or {}), _utcnow_iso())]
-        sdf = self.spark.createDataFrame(
-            row, "stage string, status string, table string, snapshot string,"
-                 " input_fingerprint string, metrics string, updated string")
+        sdf = local_frame(
+            self.spark, row,
+            "stage string, status string, table string, snapshot string,"
+            " input_fingerprint string, metrics string, updated string")
         ident = self.table_path("_stages")
         if self._exists("_stages"):
             sdf.writeTo(ident).append()
@@ -545,7 +548,7 @@ class IcebergTableIO:
                 f"{self.table_path(table)}.snapshots").collect()
             out.extend(self.lineage_from_snapshots(
                 stage, [(s["committed_at"], s["summary"]) for s in snaps]))
-        return self.spark.createDataFrame(out, schemas.LINEAGE)
+        return local_frame(self.spark, out, schemas.LINEAGE)
 
 
 def iceberg_available(spark: SparkSession, catalog: str) -> bool:

@@ -9,7 +9,11 @@ claim, checked against what Catalyst actually planned:
     (term_id, doc_id, tf, dl, salt) — never text/html/arrays;
   * zero-shuffle dedup projections really are exchange-free (minhash
     signatures);
-  * ANN brute force broadcasts the query side.
+  * ANN brute force broadcasts the query side;
+  * a query job reads the caller's query frame once and runs no Python
+    besides the WAND / block-decode operator;
+  * bm25 df is a partial count per task before its exchange, never a
+    term-partitioned window.
 
 These catch silent plan regressions (a lost broadcast hint, a filter
 that stopped pushing down) that row-level tests can't see.
@@ -17,6 +21,8 @@ that stopped pushing down) that row-level tests can't see.
 
 from __future__ import annotations
 
+import ast
+import pathlib
 import re
 
 import pytest
@@ -209,3 +215,125 @@ def test_ann_bruteforce_broadcasts_queries(spark):
         pytest.skip("driver testdata absent")
     plan = _fmt(ann_bruteforce_topk(spark, sf))
     assert "BroadcastExchange" in plan, plan
+
+
+def _nodes(plan: str) -> list[str]:
+    """Operator names of a formatted plan, one per numbered node."""
+    return re.findall(r"^\(\d+\) ([^\[\n]*?)\s*(?:\[codegen id : \d+\])?$",
+                      plan, re.M)
+
+
+def _python_nodes(plan: str) -> list[str]:
+    return [n for n in _nodes(plan) if re.search(r"Pandas|Python|Arrow", n)]
+
+
+@pytest.fixture(scope="module")
+def list_queries(spark):
+    """A query frame built from Python rows — backed by a parallelized
+    Python RDD, the shape a caller most often hands in."""
+    from elasticsearch_eslib_spark import schemas
+
+    return spark.createDataFrame(
+        [(0, "t000001 t002222", 10), (1, "t004321", 10)], schemas.QUERIES)
+
+
+def test_query_job_reads_query_frame_once(spark, built_index, list_queries):
+    """The query frame is collected by analyze_queries, so the query job
+    never plans it (no `Scan ExistingRDD`), and the only Python operator
+    left is the work itself: WAND's grouped map or the exhaustive path's
+    block decode."""
+    from elasticsearch_eslib_spark.operators.query import (
+        topk_exhaustive, topk_wand,
+    )
+    from elasticsearch_eslib_spark.plans.build_index import Index
+
+    index_dir, _ = built_index
+    idx = Index(spark, index_dir)
+    wand = _fmt(topk_wand(list_queries, idx.terms, idx.postings,
+                          idx.n_docs, idx.avg_dl))
+    assert "Scan ExistingRDD" not in wand, wand
+    assert _python_nodes(wand) == ["FlatMapGroupsInPandas"], wand
+    exh = _fmt(topk_exhaustive(list_queries, idx.terms, idx.postings,
+                               idx.n_docs, idx.avg_dl))
+    assert "Scan ExistingRDD" not in exh, exh
+    assert _python_nodes(exh) == ["MapInPandas"], exh
+
+
+def test_resolved_query_terms_are_local(spark, built_index, list_queries):
+    """Both sides of the term-resolution join are driver-side local
+    relations: every leaf of its plan is a LocalTableScan."""
+    from elasticsearch_eslib_spark.operators.query import (
+        analyze_queries, resolve_query_terms,
+    )
+    from elasticsearch_eslib_spark.plans.build_index import Index
+
+    index_dir, _ = built_index
+    idx = Index(spark, index_dir)
+    plan = _fmt(resolve_query_terms(analyze_queries(list_queries),
+                                    idx.terms, idx.n_docs))
+    scans = [n for n in _nodes(plan) if "Scan" in n]
+    assert scans == ["LocalTableScan"] * 2, plan
+    assert not _python_nodes(plan), plan
+
+
+def test_driver_rows_enter_spark_only_through_local_frame():
+    """Every `createDataFrame` call in the package sits inside
+    `planutil.local_frame`, so no driver-row frame is backed by a Python
+    RDD."""
+    pkg = (pathlib.Path(__file__).resolve().parents[1]
+           / "elasticsearch_eslib_spark")
+    calls, helper = [], None
+    for path in sorted(pkg.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        for node in ast.walk(tree):
+            if (isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "createDataFrame"):
+                calls.append((path.name, node.lineno))
+            if (isinstance(node, ast.FunctionDef)
+                    and node.name == "local_frame"):
+                helper = (path.name, node.lineno, node.end_lineno)
+    assert helper is not None and helper[0] == "planutil.py"
+    outside = [c for c in calls
+               if c[0] != helper[0] or not helper[1] <= c[1] <= helper[2]]
+    assert calls and not outside, outside
+
+
+@pytest.mark.parametrize("n", [0, 2])
+def test_local_frame_reads_rows_like_create_dataframe(spark, n):
+    """Same rows and schema as `createDataFrame` (naive datetimes are
+    local wall time, aware ones keep their instant), planned as a
+    LocalTableScan even when empty."""
+    import datetime as dt
+
+    from elasticsearch_eslib_spark import schemas
+    from elasticsearch_eslib_spark.functions.planutil import local_frame
+
+    when = [dt.datetime(2021, 5, 5, 1, 2, 3, 456789),
+            dt.datetime(2021, 5, 5, 1, 2, 3, tzinfo=dt.timezone(
+                dt.timedelta(hours=2)))]
+    rows = [("s", i, "fp", "done", 10 + i, -1, 1, when[i])
+            for i in range(n)]
+    got = local_frame(spark, rows, schemas.LINEAGE)
+    want = spark.createDataFrame(rows, schemas.LINEAGE)
+    assert got.schema == want.schema == schemas.LINEAGE
+    assert got.collect() == want.collect()
+    assert _nodes(_fmt(got)) == ["LocalTableScan"]
+
+def test_bm25_df_is_partial_count_before_exchange(spark, tmp_path):
+    """df per query term is aggregated map-side (partial_count) before a
+    hash exchange on term, so a head term's posting stream never lands
+    in one task; no window over term remains."""
+    import pandas as pd
+
+    from elasticsearch_eslib_spark.operators.fulltext import bm25_scores
+
+    pd.DataFrame({"doc_id": [1, 2], "text": ["join the dup", "the a join"],
+                  "lang": "en", "source": "web", "n_chars": [12, 10]}
+                 ).to_parquet(tmp_path / "documents.parquet")
+    plan = _fmt(bm25_scores(spark, str(tmp_path)))
+    assert "Window" not in _nodes(plan), plan
+    m = re.search(r"Keys \[1\]: \[(term#\d+)\]\n"
+                  r"Functions \[1\]: \[partial_count\(1\)\]", plan)
+    assert m, plan
+    assert f"hashpartitioning({m.group(1)}," in plan, plan
