@@ -63,8 +63,15 @@ def get_spark(app_name: str = "eslib-spark", master: str | None = None,
     n = default_parallelism()
     master = master or os.environ.get("SPARK_MASTER", f"local[{n}]")
     shuffle_partitions = shuffle_partitions or n
+    builder = SparkSession.builder
+    if master.startswith("local"):
+        # workers see the package only where the exported PYTHONPATH
+        # reaches them; the daemon keeps each task from re-reading
+        # pyspark.zip (see pydaemon)
+        builder = builder.config("spark.python.daemon.module",
+                                 "elasticsearch_eslib_spark.pydaemon")
     builder = (
-        SparkSession.builder.master(master)
+        builder.master(master)
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")

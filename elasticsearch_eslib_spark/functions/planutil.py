@@ -42,6 +42,7 @@ interpreted path — also measured, 13 s vs 7 s on the same stage).
 from __future__ import annotations
 
 from collections.abc import Iterable
+from urllib.parse import unquote, urlsplit
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
@@ -91,6 +92,54 @@ def local_frame(spark: SparkSession, rows: Iterable[tuple],
                                  schema)
 
 
+def scan_partitions(spark: SparkSession, paths: list[str]) -> int:
+    """How many partitions of Spark's parquet scan over the local files
+    `paths` read any rows. Spark's rule (FilePartition): the split size is
+    `min(maxPartitionBytes, max(openCostInBytes, padded / slots))`, where
+    `padded` charges each file openCostInBytes; files are cut into splits
+    of that size, and the splits are packed largest first, each charged
+    openCostInBytes, into partitions of at most the split size. So a few
+    large files split finer than maxPartitionBytes, and many small files
+    pack coarser than their byte total. A split reads rows only if a row
+    group's midpoint falls in it, so a file cut into several splits keeps
+    at most one busy split per row group (a single-row-group file is read
+    by one task however finely it is cut); the count is capped by that."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    sizes = [os.path.getsize(p) for p in paths]
+    ocb = conf_bytes(spark, "spark.sql.files.openCostInBytes")
+    slots = int(spark.conf.get("spark.sql.files.minPartitionNum", None)
+                or spark.conf.get("spark.sql.leafNodeDefaultParallelism",
+                                  None)
+                or spark.sparkContext.defaultParallelism)
+    split = min(conf_bytes(spark, "spark.sql.files.maxPartitionBytes"),
+                max(ocb, (sum(sizes) + len(sizes) * ocb) // slots))
+    chunks, busy = [], 0
+    for path, size in zip(paths, sizes):
+        cuts = [min(split, size - off) for off in range(0, size, split)]
+        chunks += cuts
+        # footers are read only for files cut more than once
+        busy += (len(cuts) if len(cuts) < 2 else
+                 min(len(cuts), pq.read_metadata(path).num_row_groups))
+    n, used = 0, split
+    for chunk in sorted(chunks, reverse=True):
+        if used + chunk > split:
+            n, used = n + 1, 0
+        used += chunk + ocb
+    return max(1, min(n, busy))
+
+
+def local_path(uri: str) -> str:
+    """The path of a `file:` URI on this host (`file:/x`, `file:///x`);
+    ValueError for any other scheme or for a URI naming a host."""
+    url = urlsplit(uri)
+    if url.scheme != "file" or url.netloc:
+        raise ValueError(f"not a local file: {uri}")
+    return unquote(url.path)
+
+
 def spread(df: DataFrame, by: str = "doc_id") -> DataFrame:
     """Repartition up ONLY when the input SCAN is under-parallel (a small
     local file → 1-2 tasks would serialize the CPU-heavy map work that
@@ -103,34 +152,19 @@ def spread(df: DataFrame, by: str = "doc_id") -> DataFrame:
     aggregated plan triggers eager AQE stage execution (measured: it
     silently doubled the whole candidate pipeline's cost).
 
-    The under-parallel check is ARITHMETIC (input bytes / split size from
-    the scan's files), not `.rdd.getNumPartitions()`: converting a fresh
-    DataFrame to an RDD builds the physical plan through py4j and costs
-    ~0.1-0.2 s PER CALL at the driver — ~1 s across the query suite for a
-    3 ms piece of information (inputFiles + getsize). Non-local files
-    (no file: scheme) fall back to the exact RDD probe."""
+    The under-parallel check is ARITHMETIC (`scan_partitions` over the
+    scan's local files: the scan tasks that read rows), not
+    `.rdd.getNumPartitions()`: converting a fresh DataFrame to an RDD
+    builds the physical plan through py4j and costs ~0.1-0.2 s PER CALL at
+    the driver — ~1 s across the query suite for a 3 ms piece of
+    information (inputFiles + getsize). Inputs that are not host-local
+    parquet `file:` URIs fall back to the RDD probe."""
     spark = df.sparkSession
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     try:
-        import os
-
-        mpb = conf_bytes(spark, "spark.sql.files.maxPartitionBytes")
-        # each file is charged openCostInBytes when Spark packs files
-        # into splits — without the padding the estimate undercounts the
-        # actual partition count on many-small-file corpora (e.g. 40 ×
-        # 4 MB files at mpb=8 MB: actual 40, unpadded estimate 20) and
-        # would trigger a corpus-wide repartition the old probe skipped
-        ocb = conf_bytes(spark, "spark.sql.files.openCostInBytes")
-        total = 0
-        for f in df.inputFiles():
-            if not f.startswith("file:"):
-                raise ValueError(f)
-            path = f[len("file:"):]
-            while path.startswith("//"):  # file:///x and file:/x both → /x
-                path = path[1:]
-            total += os.path.getsize(path) + ocb
-        n_scan = max(1, -(-total // mpb))
-    except Exception:
+        n_scan = scan_partitions(spark, [local_path(f)
+                                         for f in df.inputFiles()])
+    except (ValueError, OSError):
         n_scan = df.rdd.getNumPartitions()
     if n_scan < n_part:
         return df.repartition(n_part, by)

@@ -18,11 +18,14 @@ checkpointing through the TableIO interface (sources/tableio.py).
 
 from __future__ import annotations
 
+import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from elasticsearch_eslib_spark.functions.planutil import local_frame
+from elasticsearch_eslib_spark.functions.planutil import (
+    local_frame, scan_partitions,
+)
 from elasticsearch_eslib_spark.operators.build import (
     assign_doc_ids, build_postings, build_terms,
     extract_analyze_tf, term_freqs, term_freqs_nodoc,
@@ -60,20 +63,12 @@ def stats_frame(spark: SparkSession, n_docs: int, avg_dl: float,
         "built_at timestamp, snapshot string")
 
 
-def _dir_bytes(path: str) -> tuple[int, int]:
-    """(total bytes, file count) of parquet data under `path`."""
-    import os
-
+def _data_files(path: str) -> list[str]:
+    """The parquet data files under `path`."""
     if os.path.isfile(path):
-        return os.path.getsize(path), 1
-    total = 0
-    n = 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            if not f.startswith(("_", ".")):
-                total += os.path.getsize(os.path.join(root, f))
-                n += 1
-    return total, n
+        return [path]
+    return [os.path.join(root, f) for root, _dirs, files in os.walk(path)
+            for f in files if not f.startswith(("_", "."))]
 
 
 def build_index(spark: SparkSession, pages_path: str, index_dir: str,
@@ -109,7 +104,8 @@ def build_index(spark: SparkSession, pages_path: str, index_dir: str,
         # commit group). Scoped to S1: restored before S2 planning.
         mpb_key = "spark.sql.files.maxPartitionBytes"
         mpb_old = spark.conf.get(mpb_key)
-        in_bytes, n_in_files = _dir_bytes(pages_path)
+        in_files = _data_files(pages_path)
+        in_bytes = sum(map(os.path.getsize, in_files))
         if n_commit_groups is None:
             n_commit_groups = max(1, min(8, in_bytes // COMMIT_GROUP_BYTES))
         # split count must OVERSUBSCRIBE the slots (≥4×), not equal them:
@@ -136,17 +132,14 @@ def build_index(spark: SparkSession, pages_path: str, index_dir: str,
         # last-resort spread for inputs too small to split at the 2 MB
         # floor yet big enough that one extraction task would drag (the
         # packed-row shuffle this causes is tiny at that size)
-        # arithmetic split estimate (same packing rule the scan uses,
-        # each file padded by openCostInBytes) instead of
+        # arithmetic split estimate (Spark's own split rule, see
+        # scan_partitions) instead of
         # pages.rdd.getNumPartitions() — the RDD conversion costs ~0.1-0.2 s
         # of driver plan building for a number already derivable from
-        # the file sizes (see planutil.spread for the same trade)
-        from elasticsearch_eslib_spark.functions.planutil import conf_bytes
-
-        ocb = conf_bytes(spark, "spark.sql.files.openCostInBytes")
-        padded = in_bytes + n_in_files * ocb
+        # the file sizes and footers (see planutil.spread for the same
+        # trade)
         need_spread = (in_bytes > (8 << 20)
-                       and -(-padded // target) < n_part)
+                       and scan_partitions(spark, in_files) < n_part)
         done = io.done_partitions("tokenized", s1_fp) if resume else set()
         if not done:
             # nothing committed for THIS input fingerprint — start S1 clean

@@ -13,7 +13,11 @@ claim, checked against what Catalyst actually planned:
   * a query job reads the caller's query frame once and runs no Python
     besides the WAND / block-decode operator;
   * bm25 df is a partial count per task before its exchange, never a
-    term-partitioned window.
+    term-partitioned window;
+  * the scan-partition estimate equals the number of the parquet scan's
+    partitions that read rows;
+  * the near-dup and LSH-verify joins keep their score filter out of the
+    join condition (filter_once).
 
 These catch silent plan regressions (a lost broadcast hint, a filter
 that stopped pushing down) that row-level tests can't see.
@@ -337,3 +341,94 @@ def test_bm25_df_is_partial_count_before_exchange(spark, tmp_path):
                   r"Functions \[1\]: \[partial_count\(1\)\]", plan)
     assert m, plan
     assert f"hashpartitioning({m.group(1)}," in plan, plan
+
+
+@pytest.mark.parametrize("n_files,file_kb,mpb_kb,ocb_kb,rg_rows", [
+    (2, 3072, 8192, 1024, 16),   # few large files: split < maxPartitionBytes
+    (3, 2560, 1024, 256, 16),    # files larger than maxPartitionBytes
+    (12, 96, 2048, 512, 16),     # many small files: openCost bounds packing
+    (1, 1728, 1024, 512, 1024),  # one row group cut into 4 splits
+])
+def test_scan_partitions_matches_the_scan(spark, tmp_path, n_files, file_kb,
+                                          mpb_kb, ocb_kb, rg_rows):
+    """The estimate equals the number of the parquet scan's partitions
+    that read rows. In the first case dividing padded bytes by
+    maxPartitionBytes alone undercounts the scan; in the last, Spark cuts
+    a single-row-group file into 4 partitions of which only 1 reads rows,
+    so counting partitions would overcount the scan's parallelism."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from elasticsearch_eslib_spark.functions.planutil import scan_partitions
+
+    for i in range(n_files):
+        blob = pa.array([os.urandom(1 << 14) for _ in range(file_kb // 16)])
+        pq.write_table(pa.table({"b": blob}), tmp_path / f"part-{i}.parquet",
+                       compression="none", row_group_size=rg_rows)
+    paths = [str(p) for p in tmp_path.glob("*.parquet")]
+    conf = {"spark.sql.files.maxPartitionBytes": f"{mpb_kb}k",
+            "spark.sql.files.openCostInBytes": f"{ocb_kb}k"}
+    old = {k: spark.conf.get(k) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        scan = spark.read.parquet(str(tmp_path))
+        n_scan = scan.rdd.getNumPartitions()
+        n_busy = scan.select(F.spark_partition_id()).distinct().count()
+        got = scan_partitions(spark, paths)
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
+    assert got == n_busy
+    sizes = [os.path.getsize(p) for p in paths]
+    padded = sum(sizes) + n_files * (ocb_kb << 10)
+    if n_files == 2:
+        assert -(-padded // (mpb_kb << 10)) < n_scan == n_busy
+    if n_files == 1:
+        assert (n_busy, n_scan) == (1, 4)
+
+
+def test_local_path_reads_only_host_local_file_uris():
+    from elasticsearch_eslib_spark.functions.planutil import local_path
+
+    assert local_path("file:/data/x.parquet") == "/data/x.parquet"
+    assert local_path("file:///data/a%20b.parquet") == "/data/a b.parquet"
+    for uri in ("file://host/data/x.parquet", "hdfs://nn/x", "/data/x"):
+        with pytest.raises(ValueError):
+            local_path(uri)
+
+
+@pytest.mark.parametrize("op", ["minhash_lsh_pairs", "embedding_near_dup"])
+def test_filter_once_keeps_scores_out_of_join_conditions(spark, monkeypatch,
+                                                         op):
+    """The near-dup verify join and the LSH bucket join keep their score
+    filter above the join (planutil.filter_once): no join condition holds
+    the jaccard's array_intersect or the cosine's element_at products."""
+    import os
+
+    from elasticsearch_eslib_spark.functions import planutil
+    from elasticsearch_eslib_spark.operators import dedup, similarity
+    from test_pipeline_ops import SF
+
+    if not os.path.exists(f"{SF}/embeddings.parquet"):
+        pytest.skip("driver testdata absent")
+    barriered = []
+    real = planutil.filter_once
+
+    def recording(df, pred):
+        barriered.append(real(df, pred))
+        return barriered[-1]
+
+    monkeypatch.setattr(planutil, "filter_once", recording)
+    run = getattr(dedup, op, None) or getattr(similarity, op)
+    run(spark, SF)
+    assert len(barriered) == 1
+    plan = _fmt(barriered[0])
+    conds = re.findall(r"^Join condition: (.*)$", plan, re.M)
+    assert conds, plan
+    for cond in conds:
+        for expr in ("element_at", "array_intersect", "cosine", "jaccard"):
+            assert expr not in cond, plan
+    assert re.search(r"\((jaccard|cosine)#\d+ >= ", plan), plan
