@@ -1,4 +1,4 @@
-.PHONY: dist test tier1 bench scaling clean
+.PHONY: dist test tier1 oracle bench scaling clean
 
 dist:
 	rm -f dist/elasticsearch_eslib_spark.zip
@@ -14,6 +14,12 @@ test:
 tier1:
 	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; \
 	timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
+
+# the Spark-vs-DuckDB compare on indexes this tree builds: __spark_entry__
+# reuses any finished lifecycle index cached in the temp dir, so drop them
+oracle:
+	rm -rf "$$(python -c 'import tempfile; print(tempfile.gettempdir())')"/eslib_idx_v2_*
+	python scripts/check_oracle.py
 
 bench:
 	python bench.py

@@ -165,8 +165,8 @@ def encode_posting_blocks(doc_ids: np.ndarray, tfs: np.ndarray,
     """Split one term's sorted postings into packed blocks.
 
     Returns dicts with keys: n_docs, first_doc, last_doc, block_max_tf,
-    doc_deltas, tfs, dls (block_id and block_max_score are assigned by the
-    caller, which knows term idf and global ordering — SURVEY.md E9).
+    doc_deltas, tfs, dls (the caller adds term_id and the block-max bound —
+    SURVEY.md E9).
     """
     if not (len(doc_ids) == len(tfs) == len(dls)):
         raise ValueError("posting stream length mismatch")

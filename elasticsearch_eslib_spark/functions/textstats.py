@@ -9,7 +9,9 @@ expressions (JVM codegen, no Python) with exact DuckDB twins.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from functools import reduce
+
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from elasticsearch_eslib_spark.functions.hashing import md5_long
 from elasticsearch_eslib_spark.operators.fulltext import load_documents
@@ -23,6 +25,12 @@ LANGID_MARKERS: dict[str, tuple[str, ...]] = {
     "es": ("el", "la", "de", "que", "es"),
     "fr": ("le", "la", "les", "et", "est"),
 }
+
+
+def _marker_hits(toks: Column, markers: tuple[str, ...]) -> Column:
+    """How many of `toks` are in `markers`, repeats counted: the tokens
+    that removing every marker takes away (no lambda, so codegen'd)."""
+    return F.size(toks) - F.size(reduce(F.array_remove, markers, toks))
 
 
 def token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -53,7 +61,7 @@ def quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.length("text").alias("n_chars_m"),
         F.size(toks).alias("n_tokens"),
-        F.size(F.filter(toks, lambda x: x.isin(*en))).alias("n_stop"),
+        _marker_hits(toks, en).alias("n_stop"),
         F.size(F.array_distinct(toks)).alias("n_distinct"))
     return base.select(
         "doc_id", "n_chars_m", "n_tokens",
@@ -75,8 +83,7 @@ def lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     # functions are interpreted per element — measured on the bm25 path)
     toks = F.array_remove(F.split("text", " "), "")
     hit_cols = {
-        lang: F.size(F.filter(toks, lambda x: x.isin(*markers)))
-                .alias(f"{lang}_hits")
+        lang: _marker_hits(toks, markers).alias(f"{lang}_hits")
         for lang, markers in LANGID_MARKERS.items()
     }
     base = docs.select("doc_id", *hit_cols.values())

@@ -36,7 +36,7 @@ Scale notes (the design decisions that matter at 10^12 docs):
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from elasticsearch_eslib_spark import schemas
 from elasticsearch_eslib_spark.config import (
@@ -245,8 +245,8 @@ def build_postings(tf: DataFrame, terms: DataFrame,
     """E7+E8+E9: salted sorted runs → packed block rows with block-max.
 
     Output matches schemas.POSTINGS. Head terms are range-salted on doc_id
-    so no task ever holds more than ~df_max/n_salts postings; block ids come
-    from a window over block rows (cheap: 128× fewer rows than postings).
+    so no task ever holds more than ~df_max/n_salts postings. A term's
+    blocks are identified and ordered by `first_doc`.
 
     `tf` must carry `dl` (term_freqs emits it off the packed rows) — doc
     lengths never arrive via a second corpus-sized join on doc_id.
@@ -405,32 +405,24 @@ def encode_enriched(enriched: DataFrame, n_docs: int, avg_dl: float,
             yield pd.DataFrame(out)
 
     blocks = arranged.mapInPandas(_encode_groups, schema=block_schema)
-    # no idf here: block_max_raw ships idf-free (the round-2 layout joined
-    # terms back onto the block rows just to bake idf in — one whole
-    # broadcast join of the block stream gone, and appends become possible)
+    # block_max_raw is idf-free: the query path applies the current idf,
+    # so no terms join touches the block stream and appends never rewrite
+    # a committed block.
     #
-    # block ids + the bucketed FILE layout share ONE exchange (round 6):
-    # the old plan paid Exchange(hash term_id) + Sort + Window for the ids
-    # and then a SECOND Exchange(p_bucket) in every writer for the
-    # one-file-per-bucket layout. p_bucket = term_id % N_POSTING_BUCKETS
-    # puts every block of a term in one partition, and HashPartitioning on
-    # a SUBSET of a window's partition keys satisfies its clustered
-    # distribution, so Window.partitionBy(p_bucket, term_id) on top of the
-    # p_bucket repartition plans with NO further exchange (only the sort).
-    # The window groups are identical to partitionBy(term_id) alone —
-    # p_bucket is a function of term_id — so block ids are unchanged.
-    # Output stays partitioned by p_bucket for the bucketed write; writers
-    # pass it through (the append/compact paths re-repartition after their
-    # offset joins — delta-sized, unchanged). Assigning ids in a Python
-    # pass instead was measured 2× WORSE: the encoded binary blobs would
-    # cross the Arrow boundary twice more.
+    # Output layout, shared by every writer (build, append, compaction):
+    # hash-partitioned by p_bucket = term_id % N_POSTING_BUCKETS, so each
+    # bucket directory gets one file and every block of a term lands in
+    # one partition; sorted within it by (term_id, first_doc), so a term's
+    # blocks are contiguous and in doc order (the order the query path
+    # reads them in) and each file's term_id min/max stats prune row
+    # groups. The partitionBy(p_bucket) write is then a pass-through: no
+    # further exchange and no sort.
     from elasticsearch_eslib_spark.operators.query import N_POSTING_BUCKETS
 
-    bucketed = blocks.withColumn(
-        "p_bucket",
-        F.pmod(F.col("term_id"), F.lit(N_POSTING_BUCKETS)).cast("int")
-    ).repartition(N_POSTING_BUCKETS, "p_bucket")
-    w = Window.partitionBy("p_bucket", "term_id").orderBy("first_doc")
-    return (bucketed
-            .withColumn("block_id", (F.row_number().over(w) - 1).cast("int"))
+    return (blocks
+            .withColumn("p_bucket",
+                        F.pmod(F.col("term_id"), F.lit(N_POSTING_BUCKETS))
+                        .cast("int"))
+            .repartition(N_POSTING_BUCKETS, "p_bucket")
+            .sortWithinPartitions("p_bucket", "term_id", "first_doc")
             .select([f.name for f in schemas.POSTINGS.fields] + ["p_bucket"]))

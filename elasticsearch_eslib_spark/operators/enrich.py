@@ -49,7 +49,7 @@ def extract_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     bi = local_frame(spark, BIGRAM_ENTITIES, "entity string, category string")
     docs = load_documents(spark, sf_dir)
-    toks_col = F.filter(F.split("text", " "), lambda x: x != F.lit(""))
+    toks_col = F.array_remove(F.split("text", " "), "")
     base = (docs.select("doc_id", toks_col.alias("toks"))
             .where(F.size("toks") >= 2))
     t = F.col("toks")

@@ -13,12 +13,17 @@ to an existing index without touching any committed block:
                       their term_id (stability is what makes old postings
                       valid forever), df/cf updated; new terms get ids
                       after the existing max, dense by term order
-  A4 postings_a{e}    delta postings only, salted/encoded exactly like a
-                      build, block_ids continuing per term; raw (idf-free)
-                      block bounds under the POST-append avgdl
+  A4 postings_a{e}    delta postings only, salted/encoded/laid out exactly
+                      like a build; raw (idf-free) block bounds under the
+                      POST-append avgdl
   stats_a{e}          n_docs/avg_dl totals + bound_avgdl = min over epochs
                       of the avgdl blocks were encoded under — commits the
                       epoch (Index ignores epochs without this stage)
+
+A block is identified by (term_id, first_doc). Every delta doc id is
+above every existing one, so a term's delta blocks follow its existing
+blocks in doc order and the epochs' blocks never overlap: an append
+needs nothing from the prior postings.
 
 Why existing blocks never need rewriting: block bounds are stored idf-free
 (schemas.POSTINGS `block_max_raw`) and the query path derives the WAND
@@ -41,17 +46,15 @@ streaming sink rewrites staged files with fresh part names on epoch
 redelivery, so a file-name fingerprint would NOT be stable) pass
 `batch_fingerprint` explicitly.
 
-Scale note (deliberate): terms_a{e} rewrites the vocabulary table per
-epoch. Vocabulary is sublinear in corpus size (≈10^8 rows at 10^12 docs)
-— a bounded, partition-parallel rewrite — while docs/postings, the
-corpus-sized tables, are strictly append-only. Append METADATA is
-O(delta + vocab), never O(corpus): the continuation doc id comes from the
-previous epoch's committed `max_doc_id` metric and per-term block
-continuation from the previous epoch's `block_offs` table (vocab-sized,
-rewritten alongside terms) — no scan of prior docs or postings tables
-ever happens (pinned by tests/test_append.py, which physically removes
-them during an append). Legacy indexes missing the metadata fall back to
-the corpus-scan path once; their next epoch writes the metadata forward.
+Scale: terms_a{e} rewrites the vocabulary table per epoch. Vocabulary is
+sublinear in corpus size (≈10^8 rows at 10^12 docs) — a bounded,
+partition-parallel rewrite — while docs/postings, the corpus-sized
+tables, are strictly append-only. Append metadata is O(delta + vocab),
+never O(corpus): the continuation doc id is the previous epoch's
+committed `max_doc_id` metric, and no prior docs or postings table is
+read (pinned by tests/test_append.py, which physically removes them
+during an append). An index whose manifest lacks `max_doc_id` falls back
+to one scan of the prior docs tables; its next epoch writes the metric.
 """
 
 from __future__ import annotations
@@ -67,23 +70,12 @@ from elasticsearch_eslib_spark.operators.build import (
 from elasticsearch_eslib_spark.operators.ids import (
     assign_dense_ids, unpersist_ids,
 )
-from elasticsearch_eslib_spark.operators.query import N_POSTING_BUCKETS
 from elasticsearch_eslib_spark.plans.build_index import (
     committed_epochs, stats_frame,
 )
 from elasticsearch_eslib_spark.sources.tableio import (
     fingerprint_path, open_tableio,
 )
-
-
-def _has_table(io, name: str) -> bool:
-    """TableIO-impl-agnostic table existence (metadata only)."""
-    import os
-
-    exists = getattr(io, "_exists", None)
-    if exists is not None:  # IcebergTableIO
-        return bool(exists(name))
-    return os.path.isdir(io.table_path(name))
 
 
 def append_index(spark: SparkSession, pages_path: str,
@@ -124,7 +116,6 @@ def append_index(spark: SparkSession, pages_path: str,
     sfx = f"_a{e}"
     prev_postings = f"postings_a{epochs[-1]}" if epochs else "postings"
     prev_terms = f"terms_a{epochs[-1]}" if epochs else "terms"
-    prev_offs = f"block_offs_a{epochs[-1]}" if epochs else "block_offs"
     prev = io.read(last_stats).collect()[0]
     n_prev = int(prev["n_docs"])
     avgdl_prev = float(prev["avg_dl"])
@@ -231,61 +222,15 @@ def append_index(spark: SparkSession, pages_path: str,
         delta_posts = build_postings(
             term_freqs(tokenized, docs_delta), terms_merged,
             n_tot, avgdl_tot, num_partitions=n_part, n_terms=n_terms)
-        # continue block ids after each term's existing blocks. O(delta +
-        # vocab) path: the previous epoch's block_offs table (one row per
-        # term, rewritten alongside terms each epoch) carries the running
-        # per-term block count — never a scan of prior postings. Legacy
-        # indexes without the table fall back to the block-metadata scan
-        # once (128× smaller than postings, binary columns pruned).
-        if _has_table(io, prev_offs):
-            offs = io.read(prev_offs).select(
-                "term_id", F.col("n_blocks").alias("__off"))
-        else:
-            prior_posts = reduce(DataFrame.unionByName, [
-                io.read(f"postings{s}").select("term_id", "block_id")
-                for s in [""] + [f"_a{x}" for x in epochs]])
-            offs = prior_posts.groupBy("term_id").agg(
-                (F.max("block_id") + 1).cast("int").alias("__off"))
-        delta_posts = (delta_posts.join(offs, "term_id", "left")
-                       .withColumn("block_id",
-                                   (F.col("block_id")
-                                    + F.coalesce("__off", F.lit(0)))
-                                   .cast("int"))
-                       .drop("__off"))
-        # delta_posts already carries p_bucket (encode_enriched); the
-        # offset join above loses the physical layout, so restore it
-        # (delta-sized shuffle)
-        io.commit_stage(
-            st4, st4,
-            delta_posts.repartition(N_POSTING_BUCKETS, "p_bucket"),
-            s4_fp, partition_by=["p_bucket"])
+        # already p_bucket-partitioned and sorted: a pass-through write
+        io.commit_stage(st4, st4, delta_posts, s4_fp,
+                        partition_by=["p_bucket"])
 
     # ------------------------------------------------------- stats (commit)
     st5 = f"stats{sfx}"
     s5_fp = s4_fp + ":" + io.stage_snapshot(st4)
     if not io.is_done(st5, s5_fp):
         import uuid as _uuid
-
-        # roll the per-term block counts forward (vocab-sized, like terms):
-        # delta terms get their new running total from the just-committed
-        # delta postings' block metadata (delta-sized scan); untouched
-        # terms carry their prior count. A crash between this write and the
-        # stats commit re-runs this stage — the overwrite is idempotent.
-        delta_tot = (io.read(st4).groupBy("term_id")
-                     .agg((F.max("block_id") + 1).cast("int").alias("__nb")))
-        if _has_table(io, prev_offs):
-            prior = io.read(prev_offs)
-        else:  # legacy: derive prior counts from prior block metadata once
-            prior_posts = reduce(DataFrame.unionByName, [
-                io.read(f"postings{s}").select("term_id", "block_id")
-                for s in [""] + [f"_a{x}" for x in epochs]])
-            prior = prior_posts.groupBy("term_id").agg(
-                (F.max("block_id") + 1).cast("int").alias("n_blocks"))
-        merged_offs = (prior.join(delta_tot, "term_id", "full")
-                       .select("term_id",
-                               F.coalesce("__nb", "n_blocks")
-                               .cast("int").alias("n_blocks")))
-        io.write_table(f"block_offs{sfx}", merged_offs)
 
         snapshot = _uuid.uuid4().hex[:26]
         bound = min(bound_prev, avgdl_tot) if n_tot else avgdl_tot

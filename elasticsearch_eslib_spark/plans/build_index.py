@@ -23,6 +23,7 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from elasticsearch_eslib_spark import schemas
 from elasticsearch_eslib_spark.functions.planutil import (
     local_frame, scan_partitions,
 )
@@ -259,22 +260,10 @@ def build_index(spark: SparkSession, pages_path: str, index_dir: str,
             n_terms = None
         postings = build_postings(tf, terms, n_docs, avg_dl,
                                   n_terms=n_terms)
-        # one file per p_bucket dir (instead of one per encode-task per
-        # bucket): queries prune to whole buckets, so fewer/larger files
-        # cut open/footer overhead on the serve path. build_postings
-        # already emits the block rows partitioned+sorted by p_bucket
-        # (its block-id pass shares that exchange — operators/build.py),
-        # so the write is a straight pass-through, no extra shuffle.
+        # one file per p_bucket dir: build_postings emits the block rows
+        # partitioned by p_bucket and sorted, so the write is a
+        # pass-through (operators/build.py)
         io.write_table("postings", postings, partition_by=["p_bucket"])
-        # per-term running block counts (vocab-sized): the append path
-        # continues block ids from this table instead of scanning the
-        # postings' block metadata (O(vocab) metadata vs O(corpus/128)).
-        # Derived from the COMMITTED postings files — a 2-column pruned
-        # scan of block rows, negligible next to the encode it follows.
-        io.write_table("block_offs", io.read("postings")
-                       .groupBy("term_id")
-                       .agg((F.max("block_id") + 1).cast("int")
-                            .alias("n_blocks")))
         # stats carries the snapshot id it belongs to (schemas.STATS)
         import uuid as _uuid2
 
@@ -306,6 +295,14 @@ def build_index(spark: SparkSession, pages_path: str, index_dir: str,
     return metrics
 
 
+def read_postings(io, table: str) -> DataFrame:
+    """A postings table as schemas.POSTINGS plus p_bucket. Files written
+    before blocks were addressed by first_doc alone also hold a block_id
+    column; projecting it away lets such epochs union with newer ones."""
+    return io.read(table).select(
+        [f.name for f in schemas.POSTINGS.fields] + ["p_bucket"])
+
+
 class Index:
     """Loaded index handle for the query path.
 
@@ -323,7 +320,8 @@ class Index:
                            [io.read(f"docs{s}") for s in suffixes])
         self.terms = io.read(f"terms_a{epochs[-1]}" if epochs else "terms")
         self.postings = reduce(DataFrame.unionByName,
-                               [io.read(f"postings{s}") for s in suffixes])
+                               [read_postings(io, f"postings{s}")
+                                for s in suffixes])
         row = io.read(f"stats_a{epochs[-1]}" if epochs else "stats").collect()[0]
         self.n_docs = int(row["n_docs"])
         self.avg_dl = float(row["avg_dl"])

@@ -1,25 +1,28 @@
 """Index compaction ("force merge"): rewrite a multi-epoch index into a
 fresh single-epoch index directory.
 
-Appends (plans/append_index.py) deliberately never rewrite committed
-blocks, so over many epochs an index accumulates (a) per-term block
-fragmentation — every epoch ends each term with a partial tail block —
-and (b) WAND-bound looseness, because bounds are derived with the
-avgdl-drift factor max(1, avgdl_now / bound_avgdl). Compaction restores
-the cold-build state:
+Appends (plans/append_index.py) never rewrite committed blocks, so over
+many epochs an index accumulates (a) per-term block fragmentation — every
+epoch ends each term with a partial tail block — and (b) WAND-bound
+looseness, because bounds are derived with the avgdl-drift factor
+max(1, avgdl_now / bound_avgdl). Compaction restores the cold-build state:
 
   decode every block (lossless codec) → (term_id, doc_id, tf, dl)
   → re-salt / re-sort / re-encode (the build's own encode_enriched)
   → full 128-doc blocks per (term, salt-run), raw bounds under the
     CURRENT avgdl → bound_avgdl == avg_dl (drift factor back to 1)
 
-The output is a NEW index directory (docs/terms consolidated, stats
-re-stamped, fresh manifest) — immutable-snapshot style: the caller flips
-its pointer/symlink to the compacted dir, which is the only atomic swap
-primitive that works on every store (and exactly how an Iceberg catalog
-pointer swap behaves). doc_ids and term_ids are PRESERVED, so query
-results before and after compaction are identical (tested), and future
-appends continue on the compacted dir from epoch 1.
+Invariants of the output:
+  * doc_ids and term_ids are PRESERVED, so query results before and after
+    compaction are identical (tested);
+  * the postings layout is a cold build's: a block is identified by
+    (term_id, first_doc), files are p_bucket-partitioned and sorted by
+    (term_id, first_doc);
+  * the output is a NEW index directory (docs/terms consolidated, stats
+    re-stamped, fresh manifest) — immutable-snapshot style: the caller
+    flips its pointer/symlink to the compacted dir, the only atomic swap
+    primitive that works on every store (and exactly how an Iceberg
+    catalog pointer swap behaves); appends continue on it from epoch 1.
 
 Scale: one decode+encode pass over the postings — the same cost profile
 as the build's S4, shuffle sized by data volume; at 10^12 docs this runs
@@ -34,11 +37,9 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from elasticsearch_eslib_spark.config import HEAD_DF_THRESHOLD, N_SALTS
 from elasticsearch_eslib_spark.operators.build import encode_enriched
-from elasticsearch_eslib_spark.operators.query import (
-    N_POSTING_BUCKETS, decode_blocks,
-)
+from elasticsearch_eslib_spark.operators.query import decode_blocks
 from elasticsearch_eslib_spark.plans.build_index import (
-    Index, committed_epochs, stats_frame,
+    Index, committed_epochs, read_postings, stats_frame,
 )
 from elasticsearch_eslib_spark.sources.tableio import (
     _utcnow_iso, open_tableio,
@@ -111,12 +112,6 @@ def compact_index(spark: SparkSession, src_dir: str, dst_dir: str,
     # encode_enriched already emits p_bucket-partitioned, sorted blocks
     out.write_table("postings", posts, partition_by=["p_bucket"])
 
-    # per-term block counts for future appends onto the compacted dir
-    out.write_table("block_offs", out.read("postings")
-                    .groupBy("term_id")
-                    .agg((F.max("block_id") + 1).cast("int")
-                         .alias("n_blocks")))
-
     import uuid as _uuid
 
     if pre_commit_hook is not None:
@@ -146,7 +141,7 @@ def compact_index(spark: SparkSession, src_dir: str, dst_dir: str,
 
 def _epoch_stages(e: int) -> list[str]:
     return [f"tokenized_a{e}", f"docs_a{e}", f"terms_a{e}",
-            f"postings_a{e}", f"stats_a{e}", f"block_offs_a{e}"]
+            f"postings_a{e}", f"stats_a{e}"]
 
 
 def compact_epochs(spark: SparkSession, index_dir: str,
@@ -170,10 +165,10 @@ def compact_epochs(spark: SparkSession, index_dir: str,
     doc_ids and term_ids never change; merged blocks are re-encoded under
     the CURRENT avgdl with bound_avgdl = min(bound_before_suffix,
     avgdl_now) so WAND drift stays sound for the untouched older blocks;
-    per-term block ids continue from the pre-suffix block_offs so the
-    running counts stay dense; the merged epochs' batch fingerprints are
-    carried into the merged epoch's metrics so exactly-once append
-    redelivery detection survives the merge.
+    the merged blocks cover only the suffix's doc ids, so a term's blocks
+    stay disjoint and ordered by first_doc across epochs; the merged
+    epochs' batch fingerprints are carried into the merged epoch's metrics
+    so exactly-once append redelivery detection survives the merge.
 
     Atomicity: the merged tables are written to uniquely-named data dirs,
     then ONE manifest replace (ManifestTableIO.atomic_update) points the
@@ -244,7 +239,8 @@ def compact_epochs(spark: SparkSession, index_dir: str,
     docs_merged = reduce(DataFrame.unionByName,
                          [io.read(f"docs_a{e}") for e in suffix])
     posts_suffix = reduce(DataFrame.unionByName,
-                          [io.read(f"postings_a{e}") for e in suffix])
+                          [read_postings(io, f"postings_a{e}")
+                           for e in suffix])
 
     # decode ONLY the suffix epochs' blocks; re-salt under current global
     # df; re-encode under current stats (same path as the full compaction)
@@ -279,28 +275,11 @@ def compact_epochs(spark: SparkSession, index_dir: str,
     posts_new = encode_enriched(enriched, n_tot, avgdl_tot,
                                 num_partitions=n_enc)
 
-    # block ids continue after the PRE-suffix running counts (O(vocab))
-    prev_offs_tbl = f"block_offs_a{j - 1}" if j > 1 else "block_offs"
-    if os.path.isdir(io.table_path(prev_offs_tbl)):
-        prior_offs = io.read(prev_offs_tbl).select(
-            "term_id", F.col("n_blocks").alias("__off"))
-    else:  # legacy index without the metadata: one pre-suffix block scan
-        prior_posts = reduce(DataFrame.unionByName, [
-            io.read(f"postings{s}").select("term_id", "block_id")
-            for s in [""] + [f"_a{x}" for x in range(1, j)]])
-        prior_offs = prior_posts.groupBy("term_id").agg(
-            (F.max("block_id") + 1).cast("int").alias("__off"))
-    posts_new = (posts_new.join(prior_offs, "term_id", "left")
-                 .withColumn("block_id",
-                             (F.col("block_id")
-                              + F.coalesce("__off", F.lit(0))).cast("int"))
-                 .drop("__off"))
-
     # ---- write the merged tables to fresh uniquely-named dirs (invisible
     # until the manifest swap; orphaned on crash/abort — gc'able)
     uid = _uuid.uuid4().hex[:10]
     names = {t: f"{t}_a{j}__m{uid}"
-             for t in ("docs", "terms", "postings", "block_offs", "stats")}
+             for t in ("docs", "terms", "postings", "stats")}
 
     def _raw_write(dirname: str, df: DataFrame,
                    partition_by: list[str] | None = None) -> None:
@@ -311,19 +290,8 @@ def compact_epochs(spark: SparkSession, index_dir: str,
 
     _raw_write(names["docs"], docs_merged)
     _raw_write(names["terms"], terms_latest)
-    # posts_new already carries p_bucket (encode_enriched); the offset
-    # join above loses the physical layout, so restore it (delta-sized)
-    _raw_write(names["postings"],
-               posts_new.repartition(N_POSTING_BUCKETS, "p_bucket"),
-               partition_by=["p_bucket"])
-    written = spark.read.parquet(os.path.join(io.root, names["postings"]))
-    merged_counts = written.groupBy("term_id").agg(
-        (F.max("block_id") + 1).cast("int").alias("__nb"))
-    offs_src = prior_offs.withColumnRenamed("__off", "n_blocks")
-    new_offs = (offs_src.join(merged_counts, "term_id", "full")
-                .select("term_id", F.coalesce("__nb", "n_blocks")
-                        .cast("int").alias("n_blocks")))
-    _raw_write(names["block_offs"], new_offs)
+    # encode_enriched already emits p_bucket-partitioned, sorted blocks
+    _raw_write(names["postings"], posts_new, partition_by=["p_bucket"])
 
     snapshot = _uuid.uuid4().hex[:26]
     _raw_write(names["stats"],

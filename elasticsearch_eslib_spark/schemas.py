@@ -35,7 +35,6 @@ TERMS = T.StructType([
 
 POSTINGS = T.StructType([
     T.StructField("term_id", T.LongType(), False),
-    T.StructField("block_id", T.IntegerType(), False),
     T.StructField("n_docs", T.IntegerType(), False),
     T.StructField("first_doc", T.LongType(), False),
     T.StructField("last_doc", T.LongType(), False),

@@ -85,9 +85,9 @@ def test_append_with_headtail_vocab_split_matches_cold_build(
     _enrich_with_terms) forced through the FULL lifecycle: with the
     broadcast budget pinned to 8 vocabulary terms, both the cold build's
     S4 and the append's A4 take the split path (head broadcast + tail
-    sort-merge, block continuation across epochs on top). Answers must
+    sort-merge, blocks continuing across epochs on top). Answers must
     equal an UNPATCHED cold build over A ∪ B — the split may not perturb
-    salting, block ids, or the append's continuation metadata."""
+    salting, block layout, or the append's continuation metadata."""
     import elasticsearch_eslib_spark.operators.build as build_mod
 
     monkeypatch.setattr(build_mod, "BROADCAST_VOCAB_TERMS", 8)
@@ -198,8 +198,9 @@ def test_compact_restores_cold_build_shape(spark, corpora, appended_index,
                                            tmp_path_factory):
     """Compaction of the (multi-epoch) appended index: identical query
     answers with PRESERVED doc ids, single-epoch layout, tight bounds
-    (bound_avgdl == avg_dl), per-term dense block ids with full blocks
-    except tails, and future appends continue on the compacted dir."""
+    (bound_avgdl == avg_dl), per-term blocks ordered and disjoint by
+    [first_doc, last_doc] with full blocks except tails, and future
+    appends continue on the compacted dir."""
     from elasticsearch_eslib_spark.plans.compact_index import compact_index
     from elasticsearch_eslib_spark.plans.build_index import committed_epochs
     from elasticsearch_eslib_spark.sources.tableio import open_tableio
@@ -223,15 +224,20 @@ def test_compact_restores_cold_build_shape(spark, corpora, appended_index,
     assert key(src_res) == key(dst_res) and len(dst_res) > 0
     assert _url_scores(spark, dst, "wand") == before_w
     assert _url_scores(spark, dst, "exhaustive") == before_w
-    # layout: dense per-term block ids, every block but the last full
+    # layout: per-term blocks ordered and disjoint, every block but the
+    # last full
     from collections import defaultdict
+
+    from elasticsearch_eslib_spark.config import BLOCK_SIZE
 
     per_term = defaultdict(list)
     for r in idx.postings.collect():
         per_term[r["term_id"]].append(r)
     for blocks in per_term.values():
-        blocks.sort(key=lambda r: r["block_id"])
-        assert [b["block_id"] for b in blocks] == list(range(len(blocks)))
+        blocks.sort(key=lambda r: r["first_doc"])
+        for prev, nxt in zip(blocks, blocks[1:]):
+            assert prev["first_doc"] <= prev["last_doc"] < nxt["first_doc"]
+        assert all(b["n_docs"] == BLOCK_SIZE for b in blocks[:-1])
     # a further append lands on the compacted dir as epoch 1
     from elasticsearch_eslib_spark.plans.append_index import append_index
 
@@ -273,8 +279,8 @@ def test_append_reads_no_prior_corpus_tables(spark, tmp_path):
     """O(delta + vocab) append metadata (round-4 fix): with every prior
     corpus-sized table (docs, postings — base AND earlier epochs)
     physically REMOVED from disk, an append still succeeds, because the
-    continuation doc id comes from committed stage metrics and per-term
-    block continuation from the vocab-sized block_offs table. Restoring
+    continuation doc id comes from committed stage metrics and delta
+    blocks need nothing from the prior ones. Restoring
     the tables, the index answers identically to a cold build over the
     union — the strongest possible form of the 'append never scans the
     corpus' plan-shape claim."""
@@ -447,9 +453,9 @@ def test_compact_aborts_on_concurrent_append(spark, tmp_path):
 
 def test_append_onto_legacy_index_falls_back_to_scans(spark, tmp_path):
     """An index built BEFORE the O(delta) metadata existed (no max_doc_id
-    stage metric, no block_offs table) must still accept appends via the
-    corpus-scan fallback — and the epoch it commits writes the metadata
-    forward, so the NEXT append takes the O(delta) path."""
+    stage metric) must still accept appends via the docs-scan fallback —
+    and the epoch it commits writes the metric forward, so the NEXT append
+    takes the O(delta) path."""
     import json
     import shutil
 
@@ -461,8 +467,7 @@ def test_append_onto_legacy_index_falls_back_to_scans(spark, tmp_path):
     idx_dir = os.path.join(root, "idx")
     build_index(spark, a, idx_dir)
 
-    # strip the round-4 metadata → the on-disk shape of a legacy index
-    shutil.rmtree(os.path.join(idx_dir, "block_offs"))
+    # strip the max_doc_id metric → the manifest of a legacy index
     man_path = os.path.join(idx_dir, "_manifest.json")
     with open(man_path) as fh:
         man = json.load(fh)
@@ -474,7 +479,7 @@ def test_append_onto_legacy_index_falls_back_to_scans(spark, tmp_path):
     m1 = append_index(spark, b, idx_dir)  # legacy fallback path
     assert m1.get("skipped") is not True and m1["epoch"] == 1
 
-    # epoch 1 wrote max_doc_id + block_offs_a1 forward: the next append
+    # epoch 1 wrote max_doc_id forward: the next append
     # must succeed with the prior corpus tables REMOVED (O(delta) path)
     hidden = {}
     for t in ("docs", "postings", "docs_a1", "postings_a1"):
@@ -492,12 +497,108 @@ def test_append_onto_legacy_index_falls_back_to_scans(spark, tmp_path):
             == _url_scores(spark, cold_dir, "wand"))
 
 
+_SPARK_ROW_META = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _to_parent_format(index_dir: str, suffixes: list[str]) -> None:
+    """Rewrite the postings tables `postings{s}` (in epoch order) into the
+    on-disk shape of indexes that numbered blocks: an extra int `block_id`
+    after term_id, each term's blocks counted by first_doc and continuing
+    across epochs, plus a `block_offs{s}` table of per-term counts."""
+    import glob
+    import json
+
+    n_blocks: dict[int, int] = {}
+    for s in suffixes:
+        files = sorted(glob.glob(os.path.join(
+            index_dir, f"postings{s}", "p_bucket=*", "*.parquet")))
+        tables = {f: pq.ParquetFile(f).read() for f in files}
+        ids = {f: [0] * t.num_rows for f, t in tables.items()}
+        rows = sorted(
+            (tid, fd, f, i) for f, t in tables.items()
+            for i, (tid, fd) in enumerate(zip(t["term_id"].to_pylist(),
+                                              t["first_doc"].to_pylist())))
+        for tid, _fd, f, i in rows:
+            ids[f][i] = n_blocks.get(tid, 0)
+            n_blocks[tid] = ids[f][i] + 1
+        for f, t in tables.items():
+            # Spark reads its schema from this footer key, so it must list
+            # the column too
+            meta = dict(t.schema.metadata)
+            spark_schema = json.loads(meta[_SPARK_ROW_META])
+            spark_schema["fields"].insert(1, {
+                "name": "block_id", "type": "integer", "nullable": False,
+                "metadata": {}})
+            meta[_SPARK_ROW_META] = json.dumps(spark_schema)
+            pq.write_table(t.add_column(
+                1, pa.field("block_id", pa.int32(), False),
+                [pa.array(ids[f], pa.int32())]).replace_schema_metadata(meta),
+                f)
+            crc = os.path.join(os.path.dirname(f),
+                               "." + os.path.basename(f) + ".crc")
+            if os.path.exists(crc):  # the local FS checks it on read
+                os.remove(crc)
+        offs = os.path.join(index_dir, f"block_offs{s}")
+        os.makedirs(offs)
+        pq.write_table(pa.table({
+            "term_id": pa.array(list(n_blocks), pa.int64()),
+            "n_blocks": pa.array(list(n_blocks.values()), pa.int32())}),
+            os.path.join(offs, "part-00000.parquet"))
+
+
+def test_parent_format_index_reads_appends_and_compacts(spark, tmp_path):
+    """An index whose postings still carry the per-term `block_id` column
+    stays fully usable: WAND and exhaustive answers are unchanged, and an
+    append (mixing old- and new-shape epochs), a tiered merge of an old
+    and a new epoch, and a full compaction each match a cold build."""
+    from elasticsearch_eslib_spark.plans.compact_index import (
+        compact_epochs, compact_index,
+    )
+
+    root = str(tmp_path)
+    a = _write_range(os.path.join(root, "a", "pages.parquet"), 0, 300)
+    b = _write_range(os.path.join(root, "b", "pages.parquet"), 300, 400)
+    c = _write_range(os.path.join(root, "c", "pages.parquet"), 400, 500)
+    abc = _write_range(os.path.join(root, "abc", "pages.parquet"), 0, 500)
+    idx_dir = os.path.join(root, "idx")
+    build_index(spark, a, idx_dir)
+    append_index(spark, b, idx_dir)
+    before_w = _url_scores(spark, idx_dir, "wand")
+    before_e = _url_scores(spark, idx_dir, "exhaustive")
+
+    _to_parent_format(idx_dir, ["", "_a1"])
+    for t in ("postings", "postings_a1"):
+        cols = spark.read.parquet(os.path.join(idx_dir, t)).columns
+        assert "block_id" in cols, t
+    assert _url_scores(spark, idx_dir, "wand") == before_w
+    assert _url_scores(spark, idx_dir, "exhaustive") == before_e
+
+    cold_dir = os.path.join(root, "idx_cold")
+    build_index(spark, abc, cold_dir)
+    cold = _url_scores(spark, cold_dir, "wand")
+
+    m = append_index(spark, c, idx_dir)
+    assert m.get("skipped") is not True and m["epoch"] == 2
+    assert _url_scores(spark, idx_dir, "wand") == cold
+    assert _url_scores(spark, idx_dir, "exhaustive") == cold
+
+    m = compact_epochs(spark, idx_dir, from_epoch=1)
+    assert m["merged_epochs"] == [1, 2]
+    assert _url_scores(spark, idx_dir, "wand") == cold
+    assert _url_scores(spark, idx_dir, "exhaustive") == cold
+
+    dst = os.path.join(root, "idx_full")
+    compact_index(spark, idx_dir, dst)
+    assert _url_scores(spark, dst, "wand") == cold
+    assert _url_scores(spark, dst, "exhaustive") == cold
+
+
 def test_compact_epochs_merges_small_suffix_in_place(spark, tmp_path):
     """Tiered compaction: build(A) + append(B) + append(C) -> merge the
     two small epochs into one, in place. Answers (WAND and exhaustive)
     are identical before and after; epoch count drops to 1; both absorbed
     batch fingerprints survive for exactly-once redelivery; a later
-    append continues as epoch 2 with correct block-id continuation."""
+    append continues as epoch 2 and matches a cold build."""
     from elasticsearch_eslib_spark.plans.build_index import committed_epochs
     from elasticsearch_eslib_spark.plans.compact_index import compact_epochs
     from elasticsearch_eslib_spark.sources.tableio import open_tableio
@@ -535,8 +636,7 @@ def test_compact_epochs_merges_small_suffix_in_place(spark, tmp_path):
         assert r["skipped"] is True and r["epoch"] == 1
 
     # a fresh batch lands as epoch 2 and the whole thing matches a cold
-    # build over A+B+C+D (block-offs continuation is part of what this
-    # exercises)
+    # build over A+B+C+D
     m2 = append_index(spark, d, idx_dir)
     assert m2.get("skipped") is not True and m2["epoch"] == 2
     cold_dir = os.path.join(root, "idx_cold")

@@ -39,7 +39,8 @@ def test_terms_table_matches_oracle(spark, built_index, oracle_index):
 
 def test_postings_blocks_match_oracle(spark, built_index, oracle_index):
     """Decode EVERY block: postings == oracle (doc ids, tf, dl); block
-    metadata consistent; blocks doc-ordered and non-overlapping per term."""
+    metadata consistent; blocks doc-ordered and non-overlapping per term
+    when ordered by first_doc."""
     index_dir, _ = built_index
     idx = Index(spark, index_dir)
     id2term = {r["term_id"]: r["term"] for r in idx.terms.collect()}
@@ -49,9 +50,7 @@ def test_postings_blocks_match_oracle(spark, built_index, oracle_index):
         per_term.setdefault(r["term_id"], []).append(r)
     assert set(per_term) == set(id2term)
     for tid, blocks in per_term.items():
-        blocks.sort(key=lambda r: r["block_id"])
-        lasts = [b["block_id"] for b in blocks]
-        assert lasts == list(range(len(blocks)))  # dense block ids
+        blocks.sort(key=lambda r: r["first_doc"])
         docs_all, tfs_all = [], []
         prev_last = -1
         for b in blocks:
@@ -74,9 +73,9 @@ def test_postings_blocks_match_oracle(spark, built_index, oracle_index):
 
 def test_head_term_salting_matches_oracle(spark, built_index, oracle_index):
     """Force the head-term path (head_df_threshold=2 → nearly every term is
-    range-salted across 4 salts): cross-salt block concatenation, window
-    block ids over salt-disjoint runs, and under-full mid-term blocks must
-    still decode to the exact oracle posting lists, and WAND over the
+    range-salted across 4 salts): cross-salt block concatenation, blocks
+    ordered by first_doc over salt-disjoint runs, and under-full mid-term
+    blocks must still decode to the exact oracle posting lists, and WAND over the
     salted postings must equal exhaustive scoring."""
     from pyspark.sql import functions as F
 
@@ -107,8 +106,7 @@ def test_head_term_salting_matches_oracle(spark, built_index, oracle_index):
         per_term.setdefault(r["term_id"], []).append(r)
     assert set(per_term) == set(id2term)
     for tid, blocks in per_term.items():
-        blocks.sort(key=lambda r: r["block_id"])
-        assert [b["block_id"] for b in blocks] == list(range(len(blocks)))
+        blocks.sort(key=lambda r: r["first_doc"])
         docs_all, tfs_all = [], []
         prev_last = -1
         for b in blocks:
@@ -170,7 +168,7 @@ def test_vocab_headtail_split_matches_broadcast_path(spark, built_index):
 
     def key(rows):
         return sorted(
-            (r["term_id"], r["block_id"], r["first_doc"], r["last_doc"],
+            (r["term_id"], r["first_doc"], r["last_doc"],
              r["n_docs"], r["block_max_tf"], round(r["block_max_raw"], 12),
              bytes(r["doc_deltas"]), bytes(r["tfs"]), bytes(r["dls"]))
             for r in rows)

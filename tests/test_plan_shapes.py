@@ -7,6 +7,9 @@ claim, checked against what Catalyst actually planned:
     postings stream to resolve a handful of terms);
   * the S4 encode shuffle carries ONLY the five narrow posting columns
     (term_id, doc_id, tf, dl, salt) — never text/html/arrays;
+  * the encoded blocks pass one exchange (the p_bucket layout) and no
+    window, and every postings file that build, append or compaction
+    writes is sorted by (term_id, first_doc);
   * zero-shuffle dedup projections really are exchange-free (minhash
     signatures);
   * ANN brute force broadcasts the query side;
@@ -14,6 +17,8 @@ claim, checked against what Catalyst actually planned:
     besides the WAND / block-decode operator;
   * bm25 df is a partial count per task before its exchange, never a
     term-partitioned window;
+  * lang_id and quality_score count marker words with codegen'd array
+    functions, no interpreted lambda;
   * the scan-partition estimate equals the number of the parquet scan's
     partitions that read rows;
   * the near-dup and LSH-verify joins keep their score filter out of the
@@ -155,6 +160,83 @@ def test_encode_shuffle_is_narrow(spark, built_index):
         f"expected ≤2 join nodes (url map + terms), got {join_nodes}"
     # and none of them keys on doc_id (the removed second docs join)
     assert not re.search(r"keys \[1\]: \[doc_id", plan), plan
+
+
+def test_block_layout_is_one_exchange_and_no_window(spark, built_index):
+    """Above the Python encode, build_postings plans exactly one Exchange
+    (the p_bucket repartition) and a sort; blocks carry no ordinal, so no
+    Window is planned anywhere."""
+    from elasticsearch_eslib_spark.operators.build import (
+        build_postings, term_freqs,
+    )
+    from elasticsearch_eslib_spark.plans.build_index import Index
+    from elasticsearch_eslib_spark.sources.tableio import open_tableio
+
+    index_dir, _ = built_index
+    idx = Index(spark, index_dir)
+    tokenized = open_tableio(spark, index_dir).read("tokenized")
+    plan = _fmt(build_postings(term_freqs(tokenized, idx.docs), idx.terms,
+                               idx.n_docs, idx.avg_dl))
+    nodes = _nodes(plan)  # numbered bottom-up: ancestors come after
+    assert not [n for n in nodes if "Window" in n], plan
+    above = nodes[nodes.index("MapInPandas") + 1:]
+    assert [n for n in above if "Exchange" in n] == ["Exchange"], plan
+
+
+def _sorted_postings_files(table_dir: str) -> int:
+    """Assert every parquet file under `table_dir` is sorted by (term_id,
+    first_doc); return the number of files."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    n = 0
+    for root, _dirs, names in os.walk(table_dir):
+        for f in names:
+            if f.endswith(".parquet"):
+                t = pq.ParquetFile(os.path.join(root, f)).read(
+                    columns=["term_id", "first_doc"])
+                keys = list(zip(t["term_id"].to_pylist(),
+                                t["first_doc"].to_pylist()))
+                assert keys == sorted(keys), os.path.join(root, f)
+                n += 1
+    return n
+
+
+def test_postings_files_sorted_by_term_then_first_doc(spark, tmp_path):
+    """Build, append, compact_epochs and compact_index all write postings
+    files sorted by (term_id, first_doc): a term's blocks are contiguous
+    and in doc order, and each row group's term_id min/max prunes."""
+    from elasticsearch_eslib_spark.fixtures import gen_pages_range
+    from elasticsearch_eslib_spark.plans.append_index import append_index
+    from elasticsearch_eslib_spark.plans.build_index import build_index
+    from elasticsearch_eslib_spark.plans.compact_index import (
+        compact_epochs, compact_index,
+    )
+    from elasticsearch_eslib_spark.sources.tableio import open_tableio
+
+    pages = {}
+    for name, lo, hi in (("a", 0, 200), ("b", 200, 260), ("c", 260, 320)):
+        pages[name] = str(tmp_path / name)
+        spark.createDataFrame(gen_pages_range(lo, hi)).write.parquet(
+            pages[name])
+    idx_dir = str(tmp_path / "idx")
+
+    def table(name: str, index_dir: str = idx_dir) -> str:
+        return open_tableio(spark, index_dir).table_path(name)
+
+    build_index(spark, pages["a"], idx_dir)
+    assert _sorted_postings_files(table("postings")) > 0
+    append_index(spark, pages["b"], idx_dir)
+    append_index(spark, pages["c"], idx_dir)
+    for t in ("postings_a1", "postings_a2"):
+        assert _sorted_postings_files(table(t)) > 0, t
+    compact_epochs(spark, idx_dir, from_epoch=1)
+    assert not table("postings_a1").endswith("/postings_a1")  # merged
+    assert _sorted_postings_files(table("postings_a1")) > 0
+    dst = str(tmp_path / "idx_full")
+    compact_index(spark, idx_dir, dst)
+    assert _sorted_postings_files(table("postings", dst)) > 0
 
 
 def test_vocab_path_has_no_join(spark, built_index):
@@ -341,6 +423,30 @@ def test_bm25_df_is_partial_count_before_exchange(spark, tmp_path):
                   r"Functions \[1\]: \[partial_count\(1\)\]", plan)
     assert m, plan
     assert f"hashpartitioning({m.group(1)}," in plan, plan
+
+
+def test_marker_counts_have_no_lambda(spark, tmp_path):
+    """lang_id and quality_score plan no lambdafunction, and still count
+    repeated marker words once per occurrence."""
+    import pandas as pd
+
+    from elasticsearch_eslib_spark.functions.textstats import (
+        lang_id, quality_score,
+    )
+
+    pd.DataFrame({"doc_id": [1, 2],
+                  "text": ["the the a  x and der", "la la la le x"],
+                  "lang": "en", "source": "web", "n_chars": [20, 13]}
+                 ).to_parquet(tmp_path / "documents.parquet")
+    langs = lang_id(spark, str(tmp_path))
+    quality = quality_score(spark, str(tmp_path))
+    for df in (langs, quality):
+        assert "lambdafunction" not in _fmt(df).lower(), _fmt(df)
+    hits = {r["doc_id"]: (r["en_hits"], r["de_hits"], r["es_hits"],
+                          r["fr_hits"]) for r in langs.collect()}
+    assert hits == {1: (4, 1, 0, 0), 2: (0, 0, 3, 4)}
+    assert {r["doc_id"]: r["stopword_ratio"]
+            for r in quality.collect()} == {1: round(4 / 6, 6), 2: 0.0}
 
 
 @pytest.mark.parametrize("n_files,file_kb,mpb_kb,ocb_kb,rg_rows", [

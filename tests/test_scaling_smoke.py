@@ -21,8 +21,8 @@ def _index_fingerprint(spark, index_dir):
     for r in idx.postings.collect():
         d, t, l = decode_posting_block(r["first_doc"], r["doc_deltas"],
                                        r["tfs"], r["dls"])
-        postings.append((r["term_id"], r["block_id"], tuple(d), tuple(t),
-                         tuple(l), round(r["block_max_raw"], 9)))
+        postings.append((r["term_id"], tuple(d), tuple(t), tuple(l),
+                         round(r["block_max_raw"], 9)))
     return docs, terms, sorted(postings)
 
 
