@@ -82,6 +82,12 @@ def get_spark(app_name: str = "eslib-spark", master: str | None = None,
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
         .config("spark.ui.enabled", str(ui).lower())
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # every literal list of 2+ values becomes an InSet: over a long
+        # column its generated code references the value set instead of
+        # spelling each value out, so a query's term ids never change the
+        # source of a compiled class (see operators/query.py), and parquet
+        # still receives it as a pushed In filter
+        .config("spark.sql.optimizer.inSetConversionThreshold", "1")
         # bounded driver-metadata probes (oversized LSH/simhash buckets,
         # query term lists) end in limit(N).collect(); the default
         # CollectLimit strategy scans 1 partition, then 4, 16, ... — a

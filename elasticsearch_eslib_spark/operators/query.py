@@ -19,13 +19,25 @@ runs no Python except the work itself: the WAND `applyInPandas`
 Queries are driver-sized by construction: their terms are collected to
 build an `isin` predicate that prunes the postings scan to a few parquet
 partitions/row-groups (p_bucket directory pruning + term_id min/max
-stats), and the resolved frame is broadcast. Scoring needs no join
-against the docs table because doc_len is packed inside each block (see
-build.py).
+stats), and each posting row finds its queries, k and idf through the
+resolved routes (`route_to_queries`). Scoring needs no join against the
+docs table because doc_len is packed inside each block (see build.py).
+
+Compiled-code invariant: a query's values enter its plan as local
+relations, broadcast rows, map literals or `InSet` references, never as
+primitive literals in generated code. Spark writes a long or double
+literal into the Java source it compiles, so a per-query literal makes
+every new query compile fresh classes; a map literal or an `InSet` is
+referenced by the source instead, so every query of a shape reuses the
+classes the first one compiled. The term-id prune list is an `InSet`
+(`get_spark` converts any literal list of 2+ values) and is still
+pushed to parquet as `In(term_id, ...)`; `fetch_postings` pads a
+single-id list so it is not folded into `term_id = <literal>`.
 """
 
 from __future__ import annotations
 
+import json
 import math
 
 import numpy as np
@@ -39,6 +51,9 @@ from elasticsearch_eslib_spark.functions.codec import decode_posting_block
 from elasticsearch_eslib_spark.functions.planutil import local_frame
 
 N_POSTING_BUCKETS = 32  # p_bucket = term_id % N_POSTING_BUCKETS (write + prune)
+# dense term ids start at 1: this id matches no row and lies below every
+# row group's term_id min, so it prunes nothing away and reads nothing
+NO_TERM_ID = 0
 
 
 def analyze_queries(queries: DataFrame) -> DataFrame:
@@ -62,31 +77,65 @@ def resolve_query_terms(qterms: DataFrame, terms: DataFrame,
 
     The query terms are collected (free for `analyze_queries`' local
     relation) to build a pushed-down `isin` scan of the vocabulary; the
-    matched rows (≤ #query terms) come back as a second local relation,
-    broadcast into the join; idf is computed there, in the JVM.
-    Downstream consumers (fetch_postings' prune list, the
-    WAND fan-out rule keyed on max df) read the matched rows straight off
-    the returned DataFrame's `_resolved_term_ids` / `_resolved_max_df`
-    instead of paying another action."""
-    term_list = sorted({r["term"] for r in qterms.select("term").collect()})
+    matched rows (≤ #query terms) come back as a second local relation
+    with idf computed on it, in the JVM, and broadcast into the join.
+    Downstream consumers read the matched rows straight off the returned
+    DataFrame instead of paying another action: `_resolved_term_ids`
+    (fetch_postings' prune list), `_resolved_max_df` (the WAND fan-out
+    rule) and `_routes` ({term_id: [(query_id, k, idf)]}, see
+    `route_to_queries`). Collecting a local relation runs no job, and
+    Spark folds the idf projection into it."""
+    qrows = qterms.collect()
+    term_list = sorted({r["term"] for r in qrows})
     matched_rows = (terms.where(F.col("term").isin(term_list))
                     .select("term", "term_id", "df").collect()
                     if term_list else [])
-    matched = local_frame(qterms.sparkSession, matched_rows,
-                          "term string, term_id long, df long")
-    resolved = (qterms.join(F.broadcast(matched), "term")
-                .withColumn("idf", F.log(
-                    (F.lit(float(n_docs)) - F.col("df") + 0.5)
-                    / (F.col("df") + 0.5) + 1.0)))
-    resolved._resolved_term_ids = sorted(  # noqa: SLF001
-        {int(r["term_id"]) for r in matched_rows})
+    matched = (local_frame(qterms.sparkSession, matched_rows,
+                           "term string, term_id long, df long")
+               .withColumn("idf", F.log(
+                   (F.lit(float(n_docs)) - F.col("df") + 0.5)
+                   / (F.col("df") + 0.5) + 1.0)))
+    resolved = qterms.join(F.broadcast(matched), "term")
+    by_term = {r["term"]: r for r in matched.collect()}
+    routes: dict[int, list[tuple[int, int, float]]] = {}
+    for r in qrows:
+        m = by_term.get(r["term"])
+        if m is not None:
+            routes.setdefault(m["term_id"], []).append(
+                (r["query_id"], r["k"], m["idf"]))
+    resolved._routes = routes  # noqa: SLF001
+    resolved._resolved_term_ids = sorted(routes)  # noqa: SLF001
     resolved._resolved_max_df = max(  # noqa: SLF001
-        (int(r["df"]) for r in matched_rows), default=0)
+        (m["df"] for m in by_term.values()), default=0)
     return resolved
 
 
+_ROUTES_TYPE = ("array<struct<key:bigint,"
+                "value:array<struct<query_id:bigint,k:int,idf:double>>>>")
+
+
+def route_to_queries(df: DataFrame, resolved: DataFrame) -> DataFrame:
+    """`df` (rows carrying a term_id) + query_id, k and idf: one row per
+    query that holds the row's term.
+
+    The routes travel as one JSON string literal, which the optimizer
+    parses once on the driver and folds into a map literal keyed by
+    term_id: generated code references the map rather than spelling it
+    out, no broadcast job runs, and the plan holds one literal however
+    many queries the batch carries."""
+    entries = [{"key": tid, "value": [
+        {"query_id": q, "k": k, "idf": idf} for q, k, idf in qs]}
+        for tid, qs in resolved._routes.items()]  # noqa: SLF001
+    routes = F.map_from_entries(
+        F.from_json(F.lit(json.dumps(entries)), _ROUTES_TYPE))
+    return df.select("*", F.inline(F.element_at(routes, F.col("term_id"))))
+
+
 def fetch_postings(postings: DataFrame, resolved: DataFrame) -> DataFrame:
-    """Q3: pruned postings scan for the resolved term ids."""
+    """Q3: pruned postings scan for the resolved term ids.
+
+    A single id is padded with NO_TERM_ID so the list stays an `InSet`
+    instead of folding into a compiled `term_id = <literal>`."""
     tids = getattr(resolved, "_resolved_term_ids", None)
     if tids is None:  # resolved built outside resolve_query_terms (tests)
         tids = [r["term_id"] for r in
@@ -95,6 +144,8 @@ def fetch_postings(postings: DataFrame, resolved: DataFrame) -> DataFrame:
     df = postings
     if "p_bucket" in postings.columns:
         df = df.where(F.col("p_bucket").isin(buckets))
+    if len(tids) == 1:
+        tids = [NO_TERM_ID, *tids]
     return df.where(F.col("term_id").isin(tids))
 
 
@@ -130,9 +181,7 @@ def topk_exhaustive(queries: DataFrame, terms: DataFrame, postings: DataFrame,
     """Q5: exhaustive scoring + window rank (the self-check path)."""
     resolved = resolve_query_terms(analyze_queries(queries), terms, n_docs)
     decoded = decode_blocks(fetch_postings(postings, resolved))
-    scored = (decoded
-              .join(F.broadcast(resolved.select("query_id", "k", "term_id", "idf")),
-                    "term_id")
+    scored = (route_to_queries(decoded, resolved)
               .withColumn("part_score", _score_col(avg_dl))
               .groupBy("query_id", "k", "doc_id")
               .agg(F.sum("part_score").alias("score")))
@@ -382,18 +431,11 @@ def topk_wand(queries: DataFrame, terms: DataFrame, postings: DataFrame,
     # exact per-block max.
     avg_dl_f = float(avg_dl)
     drift = max(1.0, avg_dl_f / float(bound_avgdl or avg_dl))
-    grouped = (blocks.join(
-        F.broadcast(resolved.select("query_id", "k", "term_id", "idf")),
-        "term_id")
-        .withColumn("block_max_score",
-                    F.col("block_max_raw") * F.col("idf")
-                    * F.lit(drift * (1.0 + 1e-12))))
+    grouped = route_to_queries(blocks, resolved).withColumn(
+        "block_max_score",
+        F.col("block_max_raw") * F.col("idf") * F.lit(drift * (1.0 + 1e-12)))
     if n_ranges is None:
-        max_df = getattr(resolved, "_resolved_max_df", None)
-        if max_df is None:  # resolved built by hand (tests)
-            max_df = int(resolved.agg(
-                F.max("df")).collect()[0][0] or 0)
-        n_ranges = wand_auto_ranges(int(max_df))
+        n_ranges = wand_auto_ranges(resolved._resolved_max_df)  # noqa: SLF001
     # doc ids are dense 1..n_docs (E3); width covers the full id space
     width = max(1, (n_docs + n_ranges) // n_ranges)
 

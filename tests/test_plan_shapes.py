@@ -15,6 +15,11 @@ claim, checked against what Catalyst actually planned:
   * ANN brute force broadcasts the query side;
   * a query job reads the caller's query frame once and runs no Python
     besides the WAND / block-decode operator;
+  * a query's term ids never become literals in generated code: the
+    prune list stays an InSet (still pushed to parquet), and a query
+    over new terms compiles no class;
+  * a request's (query_id, k, idf) routes reach the postings rows as
+    one folded map literal, with no broadcast job, at any batch size;
   * bm25 df is a partial count per task before its exchange, never a
     term-partitioned window;
   * lang_id and quality_score count marker words with codegen'd array
@@ -61,6 +66,25 @@ def test_postings_fetch_is_pruned(spark, built_index):
     plan = _fmt(fetch_postings(idx.postings, two))
     assert re.search(r"PartitionFilters: \[.*p_bucket", plan), plan
     assert re.search(r"PushedFilters: \[.*[Ii]n\(term_id", plan), plan
+
+
+@pytest.mark.parametrize("n_terms", [1, 3, 13])
+def test_postings_fetch_prunes_without_id_literals(spark, built_index,
+                                                   n_terms):
+    """The term-id prune list stays an InSet for any number of ids, a
+    single id included: pushed to parquet as In(term_id, ...), with the
+    p_bucket partition pruning kept, and never folded into a
+    `term_id = <n>` whose literal would land in generated code."""
+    from elasticsearch_eslib_spark.operators.query import fetch_postings
+    from elasticsearch_eslib_spark.plans.build_index import Index
+
+    idx = Index(spark, built_index[0])
+    ids = idx.terms.orderBy("term_id").limit(n_terms).select("term_id")
+    plan = _fmt(fetch_postings(idx.postings, ids))
+    assert re.search(r"PartitionFilters: \[.*p_bucket", plan), plan
+    assert re.search(r"PushedFilters: \[.*In\(term_id", plan), plan
+    assert re.search(r"term_id#\d+L INSET", plan), plan
+    assert not re.search(r"term_id#\d+L = \d+|EqualTo\(term_id", plan), plan
 
 
 def test_terms_lookup_is_pruned(spark, built_index):
@@ -343,6 +367,78 @@ def test_query_job_reads_query_frame_once(spark, built_index, list_queries):
                                idx.n_docs, idx.avg_dl))
     assert "Scan ExistingRDD" not in exh, exh
     assert _python_nodes(exh) == ["MapInPandas"], exh
+
+
+def test_query_routes_are_one_folded_literal(spark, built_index):
+    """A request's (query_id, k, idf) routes reach its postings rows as
+    one map literal, whatever the batch size: here 300 queries share one
+    term, so the literal holds 300 routes. The JSON carrying it is parsed
+    once, by the optimizer (no `from_json` left in the plan to run per
+    row), and the query job plans no broadcast and no join. Every query
+    gets the single query's answer."""
+    from elasticsearch_eslib_spark import schemas
+    from elasticsearch_eslib_spark.operators import query
+    from elasticsearch_eslib_spark.plans.build_index import Index
+
+    idx = Index(spark, built_index[0])
+    one = spark.createDataFrame([(0, "t000001", 5)], schemas.QUERIES)
+    many = spark.createDataFrame([(q, "t000001", 5) for q in range(300)],
+                                 schemas.QUERIES)
+    for topk in (query.topk_wand, query.topk_exhaustive):
+        args = (idx.terms, idx.postings, idx.n_docs, idx.avg_dl)
+        res = topk(many, *args)
+        plan = _fmt(res)
+        assert "Broadcast" not in plan and "Join" not in plan, plan
+        assert "from_json" not in plan and "map(keys: [" in plan, plan
+        want = [(r["rank"], r["doc_id"], r["score"])
+                for r in topk(one, *args).collect()]
+        got: dict[int, list] = {}
+        for r in res.collect():
+            got.setdefault(r["query_id"], []).append(
+                (r["rank"], r["doc_id"], r["score"]))
+        assert want and len(got) == 300, topk.__name__
+        assert all(sorted(v) == sorted(want) for v in got.values())
+
+
+def _compiles(spark) -> int:
+    """Classes Janino has compiled in this JVM (driver and local tasks)."""
+    return (spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+            .METRIC_COMPILATION_TIME().getCount())
+
+
+def test_new_queries_compile_no_code(spark, built_index):
+    """A query's term ids enter its plan as data, never as literals in
+    generated code: once one query per shape (1, 2 and 3 resolved terms)
+    has run on a path, queries over term sets no earlier query used reuse
+    the compiled classes and the JVM compiles nothing."""
+    from elasticsearch_eslib_spark import schemas
+    from elasticsearch_eslib_spark.operators.query import (
+        topk_exhaustive, topk_wand,
+    )
+    from elasticsearch_eslib_spark.plans.build_index import Index
+
+    idx = Index(spark, built_index[0])
+    # the tail of the t-numbered vocabulary: terms no other test queries
+    tail = (idx.terms.where(F.col("term").rlike("^t[0-9]+$"))
+            .orderBy(F.col("term_id").desc()).limit(36))
+    words = [r["term"] for r in tail.collect()]
+    for topk in (topk_wand, topk_exhaustive):
+        queries = []
+        for n in [1, 2, 3] * 3:  # a warm-up round, then two of new queries
+            queries.append(" ".join(words[:n]))
+            words = words[n:]
+
+        def run(q):
+            qdf = spark.createDataFrame([(0, q, 10)], schemas.QUERIES)
+            assert topk(qdf, idx.terms, idx.postings, idx.n_docs,
+                        idx.avg_dl).collect(), (topk.__name__, q)
+
+        for q in queries[:3]:
+            run(q)
+        before = _compiles(spark)
+        for q in queries[3:]:
+            run(q)
+        assert _compiles(spark) == before, topk.__name__
 
 
 def test_resolved_query_terms_are_local(spark, built_index, list_queries):
