@@ -1,4 +1,4 @@
-.PHONY: dist test tier1 oracle bench scaling clean
+.PHONY: dist test tier1 oracle bench bench-pairs scaling clean
 
 dist:
 	rm -f dist/elasticsearch_eslib_spark.zip
@@ -23,6 +23,15 @@ oracle:
 
 bench:
 	python bench.py
+
+# the working tree vs PARENT on one perfbench workload, in alternating
+# pairs (see scripts/bench_pairs.py)
+PARENT ?= HEAD
+WORKLOAD ?= serve
+SEEDS ?= 1-10
+bench-pairs:
+	python3 scripts/bench_pairs.py --parent $(PARENT) --workload $(WORKLOAD) \
+		--seeds $(SEEDS)
 
 scaling:
 	python bench_scaling.py

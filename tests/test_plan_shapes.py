@@ -20,6 +20,10 @@ claim, checked against what Catalyst actually planned:
     over new terms compiles no class;
   * a request's (query_id, k, idf) routes reach the postings rows as
     one folded map literal, with no broadcast job, at any batch size;
+  * a WAND request resolves on the driver: two collects, no local
+    relation, four jobs;
+  * build, append and compaction write one file per bucket dir, in
+    write stages AQE sizes by the data;
   * bm25 df is a partial count per task before its exchange, never a
     term-partitioned window;
   * lang_id and quality_score count marker words with codegen'd array
@@ -263,6 +267,70 @@ def test_postings_files_sorted_by_term_then_first_doc(spark, tmp_path):
     assert _sorted_postings_files(table("postings", dst)) > 0
 
 
+def test_writes_sized_by_data_one_file_per_bucket(spark, tmp_path,
+                                                  monkeypatch):
+    """Build, append, compact_epochs and compact_index write every
+    tokenized/postings bucket dir as exactly one data file (an append's
+    tokenized table has no bucket dirs), and each of those writes runs
+    its write stage in at most spark.sql.shuffle.partitions tasks: AQE
+    sizes the stage by the data, not by the bucket count."""
+    import itertools
+    import os
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from elasticsearch_eslib_spark.fixtures import gen_pages_range
+    from elasticsearch_eslib_spark.plans.append_index import append_index
+    from elasticsearch_eslib_spark.plans.build_index import build_index
+    from elasticsearch_eslib_spark.plans.compact_index import (
+        compact_epochs, compact_index,
+    )
+
+    pages = {}
+    for name, lo, hi in (("a", 0, 200), ("b", 200, 260), ("c", 260, 320)):
+        pages[name] = str(tmp_path / name)
+        spark.createDataFrame(gen_pages_range(lo, hi)).write.parquet(
+            pages[name])
+    sc = spark.sparkContext
+    layout = re.compile(r"/(tokenized|postings)[^/]*(/g-[^/]+)?$")
+    writes: list[tuple[str, str, dict]] = []  # (path, job group, files)
+    parquet, seq = DataFrameWriter.parquet, itertools.count()
+
+    def grouped_parquet(self, path, *args, **kwargs):
+        group = f"layout-write-{next(seq)}"
+        sc.setJobGroup(group, path)
+        try:
+            parquet(self, path, *args, **kwargs)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        if layout.search(path):  # data files per bucket dir, as written
+            writes.append((path, group, {
+                d: len([f for f in os.listdir(os.path.join(path, d))
+                        if f.endswith(".parquet")])
+                for d in os.listdir(path) if "bucket=" in d}))
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", grouped_parquet)
+    idx_dir = str(tmp_path / "idx")
+    build_index(spark, pages["a"], idx_dir)
+    append_index(spark, pages["b"], idx_dir)
+    append_index(spark, pages["c"], idx_dir)
+    compact_epochs(spark, idx_dir, from_epoch=1)
+    compact_index(spark, idx_dir, str(tmp_path / "idx_full"))
+    monkeypatch.undo()
+
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
+    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    tracker = sc.statusTracker()
+    bucketed = [layout.search(p).group(1) for p, _, files in writes if files]
+    assert bucketed.count("postings") == 5 and "tokenized" in bucketed, writes
+    for path, group, files in writes:
+        assert set(files.values()) <= {1}, (path, files)
+        write_job = max(tracker.getJobIdsForGroup(group))
+        stage = max(tracker.getJobInfo(write_job).stageIds)
+        tasks = tracker.getStageInfo(stage).numTasks
+        assert tasks <= n_part, (path, tasks)
+
+
 def test_vocab_path_has_no_join(spark, built_index):
     """The terms stage (S3/A3) aggregates per term and must never pay the
     corpus-sized url-join with docs — its plan holds zero Join nodes and
@@ -439,6 +507,43 @@ def test_new_queries_compile_no_code(spark, built_index):
         for q in queries[3:]:
             run(q)
         assert _compiles(spark) == before, topk.__name__
+
+
+def test_wand_request_resolves_on_the_driver(spark, built_index,
+                                             list_queries, monkeypatch):
+    """A single-range WAND request resolves its terms with exactly two
+    driver collects (the query frame and the vocabulary lookup), builds no
+    local relation, and then runs its WAND as the request's only other
+    work: 4 Spark jobs in all."""
+    from elasticsearch_eslib_spark.operators import query
+    from elasticsearch_eslib_spark.plans.build_index import Index
+
+    idx = Index(spark, built_index[0])
+    calls = {"collect": 0, "local_frame": 0}
+    cls = type(list_queries)
+    collect, local_frame = cls.collect, query.local_frame
+
+    def counted(name, fn):
+        def wrapper(*args, **kwargs):
+            calls[name] += 1
+            return fn(*args, **kwargs)
+        return wrapper
+
+    sc = spark.sparkContext
+    sc.setJobGroup("wand-request", "wand-request")
+    try:
+        monkeypatch.setattr(cls, "collect", counted("collect", collect))
+        monkeypatch.setattr(query, "local_frame",
+                            counted("local_frame", local_frame))
+        res = query.topk_wand(list_queries, idx.terms, idx.postings,
+                              idx.n_docs, idx.avg_dl)
+        monkeypatch.undo()
+        assert calls == {"collect": 2, "local_frame": 0}, calls
+        assert res.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
+    assert len(sc.statusTracker().getJobIdsForGroup("wand-request")) == 4
 
 
 def test_resolved_query_terms_are_local(spark, built_index, list_queries):
