@@ -18,7 +18,7 @@ tier1:
 # the Spark-vs-DuckDB compare on indexes this tree builds: __spark_entry__
 # reuses any finished lifecycle index cached in the temp dir, so drop them
 oracle:
-	rm -rf "$$(python -c 'import tempfile; print(tempfile.gettempdir())')"/eslib_idx_v2_*
+	rm -rf "$$(python -c 'import tempfile; print(tempfile.gettempdir())')"/eslib_idx_v*_*
 	python scripts/check_oracle.py
 
 bench:

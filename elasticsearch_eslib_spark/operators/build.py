@@ -209,8 +209,8 @@ def _enrich_with_terms(tf: DataFrame, terms: DataFrame,
     """
     dim = terms.select("term", "term_id", "df")
     if n_terms is None:
-        # unknown vocabulary size (legacy manifests without the n_terms
-        # metric, or direct calls): COUNT it — one O(vocab) job, trivial
+        # unknown vocabulary size (direct calls only; the plans pass the
+        # committed n_terms metric): COUNT it — one O(vocab) job, trivial
         # next to the encode — rather than force-broadcasting a dimension
         # that might be 10^8 rows (the old fallback OOMed the driver on a
         # genuinely large vocab; an unhinted join would silently flip to a

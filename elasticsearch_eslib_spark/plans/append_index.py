@@ -53,15 +53,14 @@ tables, are strictly append-only. Append metadata is O(delta + vocab),
 never O(corpus): the continuation doc id is the previous epoch's
 committed `max_doc_id` metric, and no prior docs or postings table is
 read (pinned by tests/test_append.py, which physically removes them
-during an append). An index whose manifest lacks `max_doc_id` falls back
-to one scan of the prior docs tables; its next epoch writes the metric.
+during an append).
 """
 
 from __future__ import annotations
 
 import time
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import SparkSession, functions as F
 
 from elasticsearch_eslib_spark.operators.build import (
     TOKENS_PER_ENCODE_TASK, assign_doc_ids, build_postings,
@@ -94,21 +93,15 @@ def append_index(spark: SparkSession, pages_path: str,
     epochs = committed_epochs(io)
     fp_batch = batch_fingerprint or fingerprint_path(pages_path)
 
-    from elasticsearch_eslib_spark.streaming.ingest import fingerprints_match
-
     last_stats = f"stats_a{epochs[-1]}" if epochs else "stats"
     for prev_e in reversed(epochs):
         m_prev = io.stage_metrics(f"stats_a{prev_e}")
         # merged_batch_fingerprints: a partially-compacted epoch carries
         # the fingerprints of every batch it absorbed (compact_epochs) —
-        # redelivery of any of them must still be a no-op. Matching goes
-        # through fingerprints_match so a v2 content fingerprint still
-        # recognizes an epoch committed under the legacy v1 format
-        # (pre-lang hash) — an unversioned hash change here silently
-        # re-appended already-indexed batches as duplicates.
+        # redelivery of any of them must still be a no-op
         stored = ([m_prev.get("batch_fingerprint")]
-                  + list(m_prev.get("merged_batch_fingerprints", [])))
-        if any(fingerprints_match(fp_batch, s) for s in stored):
+                  + m_prev.get("merged_batch_fingerprints", []))
+        if fp_batch in stored:
             return {"skipped": True, "epoch": prev_e,
                     "wall_sec": time.time() - t_start}
 
@@ -119,8 +112,7 @@ def append_index(spark: SparkSession, pages_path: str,
     prev = io.read(last_stats).collect()[0]
     n_prev = int(prev["n_docs"])
     avgdl_prev = float(prev["avg_dl"])
-    bound_prev = (float(prev["bound_avgdl"])
-                  if "bound_avgdl" in prev.__fields__ else avgdl_prev)
+    bound_prev = float(prev["bound_avgdl"])
     # epoch chain: same batch against a different index state is a new epoch
     fp = fp_batch + ":" + io.stage_snapshot(prev_postings)
     metrics: dict = {"epoch": e, "batch_fingerprint": fp_batch}
@@ -134,25 +126,13 @@ def append_index(spark: SparkSession, pages_path: str,
 
     # ------------------------------------------------------------- A2
     # ids continue after the existing MAX id (ids cover rejects too, so
-    # this is max(doc_id), not stats.n_docs). O(delta) path: the previous
-    # epoch committed its max_doc_id as a stage metric — one metadata read.
-    # Legacy indexes (built before the metric existed) fall back to a
-    # narrow-column agg over the prior docs tables ONCE; this epoch then
-    # writes the metric forward.
+    # this is max(doc_id), not stats.n_docs): the previous epoch committed
+    # it as its max_doc_id stage metric — one metadata read, O(delta)
     st2 = f"docs{sfx}"
     s2_fp = fp + ":" + io.stage_snapshot(st1)
-    from functools import reduce
-
     if not io.is_done(st2, s2_fp):
         prev_meta_stage = f"stats_a{epochs[-1]}" if epochs else "postings"
-        base_id = io.stage_metrics(prev_meta_stage).get("max_doc_id")
-        if base_id is None:  # legacy fallback: corpus-proportional scan
-            prior_docs = reduce(DataFrame.unionByName, [
-                io.read(f"docs{s}")
-                for s in [""] + [f"_a{x}" for x in epochs]])
-            base_id = int(
-                prior_docs.agg(F.max("doc_id")).collect()[0][0] or 0)
-        base_id = int(base_id)
+        base_id = int(io.stage_metrics(prev_meta_stage)["max_doc_id"])
         delta = assign_doc_ids(tokenized)
         sums = delta._dense_ids_sums  # noqa: SLF001
         n_new = int(sums["__ok"])
@@ -215,13 +195,10 @@ def append_index(spark: SparkSession, pages_path: str,
         n_conf = int(spark.conf.get("spark.sql.shuffle.partitions"))
         n_part = max(n_conf, (dl_new + TOKENS_PER_ENCODE_TASK - 1)
                      // TOKENS_PER_ENCODE_TASK)
-        try:  # absent only on pre-upgrade manifests → broadcast whole
-            n_terms = io.stage_metrics(st3).get("n_terms")
-        except KeyError:
-            n_terms = None
         delta_posts = build_postings(
             term_freqs(tokenized, docs_delta), terms_merged,
-            n_tot, avgdl_tot, num_partitions=n_part, n_terms=n_terms)
+            n_tot, avgdl_tot, num_partitions=n_part,
+            n_terms=io.stage_metrics(st3)["n_terms"])
         # already p_bucket-partitioned and sorted: a pass-through write
         io.commit_stage(st4, st4, delta_posts, s4_fp,
                         partition_by=["p_bucket"])
@@ -240,12 +217,7 @@ def append_index(spark: SparkSession, pages_path: str,
             s5_fp, snapshot=snapshot,
             metrics={"batch_fingerprint": fp_batch, "n_new": n_new,
                      "n_docs": n_tot, "avg_dl": avgdl_tot,
-                     # m2 lacks the metric only when A2 committed under an
-                     # older version; the delta-sized agg backfills it
-                     "max_doc_id": int(
-                         m2.get("max_doc_id")
-                         or docs_delta.agg(
-                             F.max("doc_id")).collect()[0][0] or 0)})
+                     "max_doc_id": m2["max_doc_id"]})
 
     metrics.update({"n_new": n_new, "n_docs": n_tot, "avg_dl": avgdl_tot,
                     "wall_sec": time.time() - t_start})

@@ -23,7 +23,6 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from elasticsearch_eslib_spark import schemas
 from elasticsearch_eslib_spark.functions.planutil import (
     local_frame, scan_partitions,
 )
@@ -255,14 +254,8 @@ def build_index(spark: SparkSession, pages_path: str, index_dir: str,
         # itself a checkpoint); dl rides the packed rows through the
         # explode, so S4 pays exactly ONE corpus-sized join (url → doc_id)
         tf = term_freqs(tokenized, docs)
-        # n_terms missing only on manifests committed before it was
-        # recorded — the join then broadcasts whole, the legacy behavior
-        try:
-            n_terms = io.stage_metrics("terms").get("n_terms")
-        except KeyError:
-            n_terms = None
         postings = build_postings(tf, terms, n_docs, avg_dl,
-                                  n_terms=n_terms)
+                                  n_terms=io.stage_metrics("terms")["n_terms"])
         # one file per p_bucket dir: build_postings emits the block rows
         # partitioned by p_bucket and sorted, so the write is a
         # pass-through (operators/build.py)
@@ -276,34 +269,17 @@ def build_index(spark: SparkSession, pages_path: str, index_dir: str,
         io.commit_stage("postings", "postings", None, s4_fp,
                         snapshot=snapshot,
                         metrics={"n_docs": n_docs, "avg_dl": avg_dl,
-                                 "max_doc_id": int(
-                                     io.stage_metrics("docs_tf")
-                                     .get("max_doc_id", n_docs)),
+                                 "max_doc_id": s2_metrics["max_doc_id"],
                                  "wall_ms": int((time.time() - t0) * 1000)})
 
-    # n_docs/avg_dl come from the manifest metrics (same values the stats
-    # table holds) — the stats-table read here was one more ~0.3 s per-job
-    # floor at the build tail; legacy manifests without the metrics fall
-    # back to the table
-    try:
-        s2m = io.stage_metrics("docs_tf")
-        metrics["n_docs"] = int(s2m["n_docs"])
-        metrics["avg_dl"] = float(s2m["avg_dl"])
-    except KeyError:
-        stats = io.read("stats").collect()[0]
-        metrics["n_docs"] = int(stats["n_docs"])
-        metrics["avg_dl"] = float(stats["avg_dl"])
+    # n_docs/avg_dl come from the manifest metrics (the values the stats
+    # table holds): reading the table costs one more job at the build tail
+    s2m = io.stage_metrics("docs_tf")
+    metrics["n_docs"] = int(s2m["n_docs"])
+    metrics["avg_dl"] = float(s2m["avg_dl"])
     metrics["wall_sec"] = time.time() - t_start
     metrics["docs_per_sec"] = metrics["n_docs"] / metrics["wall_sec"]
     return metrics
-
-
-def read_postings(io, table: str) -> DataFrame:
-    """A postings table as schemas.POSTINGS plus p_bucket. Files written
-    before blocks were addressed by first_doc alone also hold a block_id
-    column; projecting it away lets such epochs union with newer ones."""
-    return io.read(table).select(
-        [f.name for f in schemas.POSTINGS.fields] + ["p_bucket"])
 
 
 class Index:
@@ -323,16 +299,11 @@ class Index:
                            [io.read(f"docs{s}") for s in suffixes])
         self.terms = io.read(f"terms_a{epochs[-1]}" if epochs else "terms")
         self.postings = reduce(DataFrame.unionByName,
-                               [read_postings(io, f"postings{s}")
-                                for s in suffixes])
+                               [io.read(f"postings{s}") for s in suffixes])
         row = io.read(f"stats_a{epochs[-1]}" if epochs else "stats").collect()[0]
         self.n_docs = int(row["n_docs"])
         self.avg_dl = float(row["avg_dl"])
-        # pre-append-era stats tables lack the column: a single-epoch index
-        # has bound_avgdl == avg_dl by construction
-        self.bound_avgdl = (float(row["bound_avgdl"])
-                            if "bound_avgdl" in row.__fields__
-                            else self.avg_dl)
+        self.bound_avgdl = float(row["bound_avgdl"])
         self.io = io
 
 

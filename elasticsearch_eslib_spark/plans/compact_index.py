@@ -39,7 +39,7 @@ from elasticsearch_eslib_spark.config import HEAD_DF_THRESHOLD, N_SALTS
 from elasticsearch_eslib_spark.operators.build import encode_enriched
 from elasticsearch_eslib_spark.operators.query import decode_blocks
 from elasticsearch_eslib_spark.plans.build_index import (
-    Index, committed_epochs, read_postings, stats_frame,
+    Index, committed_epochs, stats_frame,
 )
 from elasticsearch_eslib_spark.sources.tableio import (
     _utcnow_iso, open_tableio,
@@ -49,6 +49,23 @@ from elasticsearch_eslib_spark.sources.tableio import (
 class CompactionConflict(RuntimeError):
     """An append committed to the source index while compaction ran; the
     compacted output would silently drop that epoch — abort uncommitted."""
+
+
+def _reenrich(postings: DataFrame, terms: DataFrame,
+              n_docs: int) -> DataFrame:
+    """Decoded blocks as encode_enriched input: dl rides inside the
+    blocks, df comes from the (vocab-sized, broadcast) terms table for
+    head-term salting under the current `n_docs`."""
+    salt_width = max(1, (n_docs + N_SALTS - 1) // N_SALTS)
+    return (decode_blocks(postings)
+            .join(F.broadcast(terms.select("term_id", "df")), "term_id")
+            .select("term_id", "doc_id",
+                    F.col("tf").cast("int").alias("tf"),
+                    F.col("dl").cast("int").alias("dl"),
+                    F.when(F.col("df") > HEAD_DF_THRESHOLD,
+                           F.least((F.col("doc_id") / salt_width).cast("int"),
+                                   F.lit(N_SALTS - 1)))
+                    .otherwise(F.lit(0)).alias("salt")))
 
 
 def _index_state(spark: SparkSession, src_dir: str) -> tuple:
@@ -79,30 +96,12 @@ def compact_index(spark: SparkSession, src_dir: str, dst_dir: str,
     n_docs, avg_dl = idx.n_docs, idx.avg_dl
     src_epochs = committed_epochs(idx.io)
     meta_stage = f"stats_a{src_epochs[-1]}" if src_epochs else "postings"
-    # a compaction is a corpus pass anyway, so the legacy (no-metric)
-    # fallback agg costs nothing relative to the job
-    max_doc_id = int(
-        idx.io.stage_metrics(meta_stage).get("max_doc_id")
-        or idx.docs.agg(F.max("doc_id")).collect()[0][0] or 0)
+    max_doc_id = idx.io.stage_metrics(meta_stage)["max_doc_id"]
 
     out = open_tableio(spark, dst_dir)
     fp = "compact:" + idx.io.stage_snapshot("postings")
-
-    # re-enrich from decoded blocks: dl rides inside the blocks, df comes
-    # from the (vocab-sized, broadcast) terms table for head-term salting
-    salt_width = max(1, (n_docs + N_SALTS - 1) // N_SALTS)
-    dec = decode_blocks(idx.postings)
-    enriched = (dec.join(F.broadcast(idx.terms.select("term_id", "df")),
-                         "term_id")
-                .select("term_id", "doc_id",
-                        F.col("tf").cast("int").alias("tf"),
-                        F.col("dl").cast("int").alias("dl"),
-                        F.when(F.col("df") > HEAD_DF_THRESHOLD,
-                               F.least((F.col("doc_id") / salt_width)
-                                       .cast("int"),
-                                       F.lit(N_SALTS - 1)))
-                        .otherwise(F.lit(0)).alias("salt")))
-    posts = encode_enriched(enriched, n_docs, avg_dl)
+    posts = encode_enriched(_reenrich(idx.postings, idx.terms, n_docs),
+                            n_docs, avg_dl)
 
     out.write_table("docs", idx.docs)
     out.commit_stage("docs_tf", "docs", None, fp,
@@ -201,8 +200,7 @@ def compact_epochs(spark: SparkSession, index_dir: str,
             raise ValueError("pass max_epoch_docs or from_epoch")
         j = k + 1
         for e in reversed(epochs):
-            n_new = int(io.stage_metrics(f"stats_a{e}").get("n_new", 1 << 60))
-            if n_new > max_epoch_docs:
+            if io.stage_metrics(f"stats_a{e}")["n_new"] > max_epoch_docs:
                 break
             j = e
     if k - j + 1 < 2:
@@ -218,10 +216,7 @@ def compact_epochs(spark: SparkSession, index_dir: str,
     # epoch j-1 (they were encoded under avgdls ≥ that); merged blocks are
     # encoded under avgdl_tot
     prev_stats = f"stats_a{j - 1}" if j > 1 else "stats"
-    prow = io.read(prev_stats).collect()[0]
-    bound_prev = (float(prow["bound_avgdl"])
-                  if "bound_avgdl" in prow.__fields__
-                  else float(prow["avg_dl"]))
+    bound_prev = float(io.read(prev_stats).collect()[0]["bound_avgdl"])
     bound_new = min(bound_prev, avgdl_tot)
 
     # exactly-once guard survival: collect every merged epoch's batch
@@ -239,23 +234,8 @@ def compact_epochs(spark: SparkSession, index_dir: str,
     docs_merged = reduce(DataFrame.unionByName,
                          [io.read(f"docs_a{e}") for e in suffix])
     posts_suffix = reduce(DataFrame.unionByName,
-                          [read_postings(io, f"postings_a{e}")
-                           for e in suffix])
+                          [io.read(f"postings_a{e}") for e in suffix])
 
-    # decode ONLY the suffix epochs' blocks; re-salt under current global
-    # df; re-encode under current stats (same path as the full compaction)
-    salt_width = max(1, (n_tot + N_SALTS - 1) // N_SALTS)
-    dec = decode_blocks(posts_suffix)
-    enriched = (dec.join(F.broadcast(terms_latest.select("term_id", "df")),
-                         "term_id")
-                .select("term_id", "doc_id",
-                        F.col("tf").cast("int").alias("tf"),
-                        F.col("dl").cast("int").alias("dl"),
-                        F.when(F.col("df") > HEAD_DF_THRESHOLD,
-                               F.least((F.col("doc_id") / salt_width)
-                                       .cast("int"),
-                                       F.lit(N_SALTS - 1)))
-                        .otherwise(F.lit(0)).alias("salt")))
     # size the encode shuffle from the MERGED SUFFIX volume, not the total
     # corpus: encode_enriched's default derives task count from
     # n_docs·avg_dl, which at a 10^12-doc steady state would schedule
@@ -266,14 +246,16 @@ def compact_epochs(spark: SparkSession, index_dir: str,
         TOKENS_PER_ENCODE_TASK,
     )
 
-    n_new_suffix = sum(
-        int(io.stage_metrics(f"stats_a{e}").get("n_new", 0)) for e in suffix)
+    n_new_suffix = sum(io.stage_metrics(f"stats_a{e}")["n_new"]
+                       for e in suffix)
     suffix_tokens = max(1, int(n_new_suffix * avgdl_tot))
     n_conf = int(spark.conf.get("spark.sql.shuffle.partitions"))
     n_enc = max(n_conf, (suffix_tokens + TOKENS_PER_ENCODE_TASK - 1)
                 // TOKENS_PER_ENCODE_TASK)
-    posts_new = encode_enriched(enriched, n_tot, avgdl_tot,
-                                num_partitions=n_enc)
+    # decode ONLY the suffix epochs' blocks; re-salt under current global
+    # df; re-encode under current stats (same path as the full compaction)
+    posts_new = encode_enriched(_reenrich(posts_suffix, terms_latest, n_tot),
+                                n_tot, avgdl_tot, num_partitions=n_enc)
 
     # ---- write the merged tables to fresh uniquely-named dirs (invisible
     # until the manifest swap; orphaned on crash/abort — gc'able)
@@ -297,7 +279,7 @@ def compact_epochs(spark: SparkSession, index_dir: str,
     _raw_write(names["stats"],
                stats_frame(spark, n_tot, avgdl_tot, bound_new, snapshot))
 
-    max_doc_id = int(io.stage_metrics(f"stats_a{k}").get("max_doc_id", 0))
+    max_doc_id = io.stage_metrics(f"stats_a{k}")["max_doc_id"]
     n_new_merged = n_new_suffix  # already summed for the encode sizing
 
     if pre_commit_hook is not None:

@@ -18,7 +18,9 @@ done_partitions / lineage_df / reset_stage) with two implementations:
     {stage → snapshot_id, input_fingerprint, metrics} and per-(stage,
     partition) lineage rows. A commit group writes to a uniquely-named
     subdirectory and becomes visible only when its lineage rows land in the
-    manifest (os.replace = the atomic commit point).
+    manifest (os.replace = the atomic commit point). The manifest carries
+    `format_version`; opening one with another version (or none) raises
+    IndexFormatError.
 
 Resume contract (C3): a stage re-runs only if its recorded input
 fingerprint differs or its status is not 'done'; bucket-level stages
@@ -48,18 +50,16 @@ def _utcnow_iso() -> str:
 
 
 def _parse_iso(s: str):
-    """Parse either timestamp layout (legacy second-precision manifests and
-    current microsecond ones) as an AWARE UTC datetime — naive datetimes
-    would be reinterpreted in the Spark session timezone, skewing lineage
-    'updated' values on non-UTC sessions."""
+    """Parse a `_utcnow_iso` timestamp as an AWARE UTC datetime — naive
+    datetimes would be reinterpreted in the Spark session timezone,
+    skewing lineage 'updated' values on non-UTC sessions."""
     import datetime as dt
 
-    for fmt in ("%Y-%m-%dT%H:%M:%S.%fZ", "%Y-%m-%dT%H:%M:%SZ"):
-        try:
-            return dt.datetime.strptime(s, fmt).replace(tzinfo=dt.timezone.utc)
-        except ValueError:
-            continue
-    return dt.datetime(1970, 1, 1, tzinfo=dt.timezone.utc)
+    try:
+        return dt.datetime.strptime(s, "%Y-%m-%dT%H:%M:%S.%fZ").replace(
+            tzinfo=dt.timezone.utc)
+    except ValueError:
+        return dt.datetime(1970, 1, 1, tzinfo=dt.timezone.utc)
 
 
 def _check_ident(name: str, dots: bool = False) -> str:
@@ -103,6 +103,15 @@ def fingerprint_path(path: str) -> str:
     return digest[:16]
 
 
+# The on-disk format every manifest is stamped with (INDEX_FORMAT.md).
+# A manifest with no stamp or another one is refused, never read.
+FORMAT_VERSION = 3
+
+
+class IndexFormatError(RuntimeError):
+    """An existing `_manifest.json` was written in another index format."""
+
+
 class ManifestTableIO:
     """Snapshot/lineage semantics over plain Parquet (Iceberg fallback)."""
 
@@ -114,10 +123,17 @@ class ManifestTableIO:
         self.manifest = self._load()
 
     def _load(self) -> dict:
-        if os.path.exists(self.manifest_path):
-            with open(self.manifest_path) as fh:
-                return json.load(fh)
-        return {"stages": {}, "lineage": []}
+        if not os.path.exists(self.manifest_path):
+            return {"format_version": FORMAT_VERSION,
+                    "stages": {}, "lineage": []}
+        with open(self.manifest_path) as fh:
+            manifest = json.load(fh)
+        found = manifest.get("format_version")
+        if found != FORMAT_VERSION:
+            raise IndexFormatError(
+                f"{self.root}: index format {found} is not {FORMAT_VERSION}"
+                "; rebuild this index with build_index")
+        return manifest
 
     def _save(self) -> None:
         tmp = self.manifest_path + ".tmp"
@@ -281,13 +297,6 @@ class ManifestTableIO:
 
         table_dir = self.table_path(table)
         keep = self.registered_dirs(stage)
-        if any(r.get("stage") == stage and r.get("status") == "done"
-               and not r.get("data_dir") for r in self.manifest["lineage"]):
-            # legacy layout: done lineage rows carry no data_dir, so data
-            # lives directly under the table dir (read() falls back to the
-            # whole-table scan) — gc here would wipe committed buckets while
-            # done_partitions() still reports them done
-            return
         if os.path.isdir(table_dir):
             for sub in os.listdir(table_dir):
                 if sub not in keep:

@@ -39,7 +39,6 @@ these with the memory sink + processAllAvailable (synchronous, hermetic).
 from __future__ import annotations
 
 import os
-import re
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -198,56 +197,22 @@ def stream_socket_pages_ingest(spark: SparkSession, host: str, port: int,
 
 
 def batch_content_fingerprint(df: DataFrame) -> str:
-    """Order-independent CONTENT fingerprint of a pages batch (format v2:
-    ``cv2-<n>-<hash(url,html,lang)>-<hash(url,html)>``): row count +
-    bit_xor of per-row xxhash64. Identical content → identical
-    fingerprint no matter how the rows are laid out in files — which a
-    file-name/size fingerprint (tableio.fingerprint_path) cannot give,
-    because every parquet rewrite mints fresh job-UUID part names.
+    """Order-independent CONTENT fingerprint of a pages batch
+    (``c<n>-<hash>``): row count + bit_xor of per-row
+    xxhash64(url, html, lang). Identical content → identical fingerprint
+    no matter how the rows are laid out in files — which a file-name/size
+    fingerprint (tableio.fingerprint_path) cannot give, because every
+    parquet rewrite mints fresh job-UUID part names.
 
-    `lang` is part of the primary hash because tokenization (analyzer/
-    stopword chain) depends on it: a batch with identical (url, html) but
-    a different lang produces DIFFERENT postings and must not be skipped
-    as an already-committed duplicate. The v1 format (``c<n>x<hash>``,
-    hash over (url, html) only) predates the lang inclusion; the v2
-    string CARRIES the v1-compatible hash so `fingerprints_match` can
-    recognize a redelivered batch whose manifest was committed by
-    pre-upgrade code — without the bridge, the hash change silently broke
-    exactly-once against pre-upgrade manifests (such a batch re-appended
-    as duplicate documents). Both hashes ride ONE partial-aggregated pass
-    over the (delta-sized) batch."""
+    `lang` is part of the hash because tokenization (analyzer/stopword
+    chain) depends on it: a batch with identical (url, html) but a
+    different lang produces DIFFERENT postings and must not be skipped as
+    an already-committed duplicate."""
     row = df.agg(
         F.count("*").alias("n"),
         F.coalesce(F.expr("bit_xor(xxhash64(url, html, lang))"),
-                   F.lit(0)).alias("h"),
-        F.coalesce(F.expr("bit_xor(xxhash64(url, html))"),
-                   F.lit(0)).alias("h1")).collect()[0]
-    mask = (1 << 64) - 1
-    return (f"cv2-{int(row['n'])}-{int(row['h']) & mask:016x}"
-            f"-{int(row['h1']) & mask:016x}")
-
-
-_V1_RE = re.compile(r"^c(\d+)x([0-9a-f]{16})$")
-_V2_RE = re.compile(r"^cv2-(\d+)-[0-9a-f]{16}-([0-9a-f]{16})$")
-
-
-def fingerprints_match(a: str | None, b: str | None) -> bool:
-    """True iff two batch fingerprints identify the SAME batch content.
-
-    Exact string equality, plus one cross-version bridge: a v2 fingerprint
-    matches a legacy v1 fingerprint when the row count and the (url, html)
-    hash the v2 string carries agree — so epoch redelivery of a batch
-    committed by pre-lang-hash code is still a no-op. Two v2 fingerprints
-    never fall back to the legacy hash (same (url, html) under a different
-    lang must NOT match)."""
-    if a is None or b is None:
-        return False
-    if a == b:
-        return True
-    m2, m1 = _V2_RE.match(a), _V1_RE.match(b)
-    if not (m2 and m1):
-        m2, m1 = _V2_RE.match(b), _V1_RE.match(a)
-    return bool(m2 and m1 and m2.groups() == m1.groups())
+                   F.lit(0)).alias("h")).collect()[0]
+    return f"c{int(row['n'])}-{int(row['h']) & (1 << 64) - 1:016x}"
 
 
 def index_append_sink(index_dir: str, stage_root: str):

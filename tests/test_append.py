@@ -335,7 +335,7 @@ def test_append_content_fingerprint_spans_restaging(spark, tmp_path):
     """The same batch content re-staged under a different physical file
     layout (fresh part names / row-group sizes — exactly what foreachBatch
     epoch redelivery produces) must not double-append when the caller
-    keys the append by CONTENT fingerprint."""
+    keys the append by CONTENT fingerprint; a lang change alters it."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -369,6 +369,12 @@ def test_append_content_fingerprint_spans_restaging(spark, tmp_path):
     fp1 = batch_content_fingerprint(spark.read.parquet(d1))
     fp2 = batch_content_fingerprint(spark.read.parquet(d2))
     assert fp1 == fp2  # content fp does not
+    # lang steers tokenization: the same (url, html) under another lang
+    # is different content
+    from pyspark.sql import functions as F
+
+    relabeled = spark.read.parquet(d1).withColumn("lang", F.lit("de"))
+    assert batch_content_fingerprint(relabeled) != fp1
 
     m1 = append_index(spark, d1, idx_dir, batch_fingerprint=fp1)
     assert m1.get("skipped") is not True and m1["epoch"] == 1
@@ -378,16 +384,17 @@ def test_append_content_fingerprint_spans_restaging(spark, tmp_path):
 
 
 def test_append_recognizes_legacy_v1_fingerprints(spark, tmp_path):
-    """On-disk compat: an epoch committed under the PRE-lang v1 content
-    fingerprint (``c<n>x<hash(url,html)>``) must still be recognized when
-    the same batch is redelivered with today's v2 fingerprint — the
-    unversioned hash change would otherwise re-append it as duplicates.
-    And a batch with identical (url, html) but different lang must NOT
-    match a v2 fingerprint (the reason lang entered the hash)."""
+    """The exactly-once guard recognizes a redelivered batch by its content
+    fingerprint alone: the same batch re-keyed by
+    ``batch_content_fingerprint`` is skipped, while the same (url, html)
+    under another lang is a new batch and commits its own epoch. The v1
+    (pre-lang) fingerprints this test once bridged are gone with the
+    indexes that held them: a manifest without the current format stamp is
+    refused (tests/test_index_format.py)."""
     from pyspark.sql import functions as F
 
     from elasticsearch_eslib_spark.streaming.ingest import (
-        batch_content_fingerprint, fingerprints_match,
+        batch_content_fingerprint,
     )
 
     root = str(tmp_path)
@@ -396,26 +403,21 @@ def test_append_recognizes_legacy_v1_fingerprints(spark, tmp_path):
     build_index(spark, a, idx_dir)
 
     d1 = _write_range(os.path.join(root, "d1", "pages.parquet"), 200, 320)
-    batch = spark.read.parquet(d1)
-    # forge the v1 fingerprint exactly as pre-upgrade code computed it
-    row = batch.agg(
-        F.count("*").alias("n"),
-        F.coalesce(F.expr("bit_xor(xxhash64(url, html))"),
-                   F.lit(0)).alias("h")).collect()[0]
-    fp_v1 = f"c{int(row['n'])}x{int(row['h']) & (1 << 64) - 1:016x}"
-    m1 = append_index(spark, d1, idx_dir, batch_fingerprint=fp_v1)
+    fp = batch_content_fingerprint(spark.read.parquet(d1))
+    m1 = append_index(spark, d1, idx_dir, batch_fingerprint=fp)
     assert m1.get("skipped") is not True and m1["epoch"] == 1
-
-    fp_v2 = batch_content_fingerprint(batch)
-    assert fp_v2.startswith("cv2-") and fingerprints_match(fp_v2, fp_v1)
-    m2 = append_index(spark, d1, idx_dir, batch_fingerprint=fp_v2)
+    m2 = append_index(spark, d1, idx_dir, batch_fingerprint=fp)
     assert m2["skipped"] is True and m2["epoch"] == 1
 
-    # different lang, same (url, html): v2-vs-v2 must NOT match
-    relabeled = batch.withColumn("lang", F.lit("de"))
-    assert not fingerprints_match(
-        batch_content_fingerprint(relabeled), fp_v2)
-    assert fingerprints_match(batch_content_fingerprint(relabeled), fp_v1)
+    # different lang, same (url, html): not a redelivery of epoch 1
+    d2 = os.path.join(root, "d2", "pages.parquet")
+    spark.read.parquet(d1).withColumn("lang", F.lit("de")).write.parquet(d2)
+    fp_de = batch_content_fingerprint(spark.read.parquet(d2))
+    assert fp_de != fp
+    m3 = append_index(spark, d2, idx_dir, batch_fingerprint=fp_de)
+    assert m3.get("skipped") is not True and m3["epoch"] == 2
+    m4 = append_index(spark, d2, idx_dir, batch_fingerprint=fp_de)
+    assert m4["skipped"] is True and m4["epoch"] == 2
 
 
 def test_compact_aborts_on_concurrent_append(spark, tmp_path):
@@ -449,148 +451,6 @@ def test_compact_aborts_on_concurrent_append(spark, tmp_path):
     assert m["n_docs"] == 600
     assert (_url_scores(spark, dst, "wand")
             == _url_scores(spark, idx_dir, "wand"))
-
-
-def test_append_onto_legacy_index_falls_back_to_scans(spark, tmp_path):
-    """An index built BEFORE the O(delta) metadata existed (no max_doc_id
-    stage metric) must still accept appends via the docs-scan fallback —
-    and the epoch it commits writes the metric forward, so the NEXT append
-    takes the O(delta) path."""
-    import json
-    import shutil
-
-    root = str(tmp_path)
-    a = _write_range(os.path.join(root, "a", "pages.parquet"), 0, 300)
-    b = _write_range(os.path.join(root, "b", "pages.parquet"), 300, 500)
-    c = _write_range(os.path.join(root, "c", "pages.parquet"), 500, 650)
-    abc = _write_range(os.path.join(root, "abc", "pages.parquet"), 0, 650)
-    idx_dir = os.path.join(root, "idx")
-    build_index(spark, a, idx_dir)
-
-    # strip the max_doc_id metric → the manifest of a legacy index
-    man_path = os.path.join(idx_dir, "_manifest.json")
-    with open(man_path) as fh:
-        man = json.load(fh)
-    for st in man["stages"].values():
-        st.get("metrics", {}).pop("max_doc_id", None)
-    with open(man_path, "w") as fh:
-        json.dump(man, fh)
-
-    m1 = append_index(spark, b, idx_dir)  # legacy fallback path
-    assert m1.get("skipped") is not True and m1["epoch"] == 1
-
-    # epoch 1 wrote max_doc_id forward: the next append
-    # must succeed with the prior corpus tables REMOVED (O(delta) path)
-    hidden = {}
-    for t in ("docs", "postings", "docs_a1", "postings_a1"):
-        src = os.path.join(idx_dir, t)
-        hidden[t] = src + ".hidden"
-        shutil.move(src, hidden[t])
-    m2 = append_index(spark, c, idx_dir)
-    assert m2.get("skipped") is not True and m2["epoch"] == 2
-    for t, h in hidden.items():
-        shutil.move(h, os.path.join(idx_dir, t))
-
-    cold_dir = os.path.join(root, "idx_cold")
-    build_index(spark, abc, cold_dir)
-    assert (_url_scores(spark, idx_dir, "wand")
-            == _url_scores(spark, cold_dir, "wand"))
-
-
-_SPARK_ROW_META = b"org.apache.spark.sql.parquet.row.metadata"
-
-
-def _to_parent_format(index_dir: str, suffixes: list[str]) -> None:
-    """Rewrite the postings tables `postings{s}` (in epoch order) into the
-    on-disk shape of indexes that numbered blocks: an extra int `block_id`
-    after term_id, each term's blocks counted by first_doc and continuing
-    across epochs, plus a `block_offs{s}` table of per-term counts."""
-    import glob
-    import json
-
-    n_blocks: dict[int, int] = {}
-    for s in suffixes:
-        files = sorted(glob.glob(os.path.join(
-            index_dir, f"postings{s}", "p_bucket=*", "*.parquet")))
-        tables = {f: pq.ParquetFile(f).read() for f in files}
-        ids = {f: [0] * t.num_rows for f, t in tables.items()}
-        rows = sorted(
-            (tid, fd, f, i) for f, t in tables.items()
-            for i, (tid, fd) in enumerate(zip(t["term_id"].to_pylist(),
-                                              t["first_doc"].to_pylist())))
-        for tid, _fd, f, i in rows:
-            ids[f][i] = n_blocks.get(tid, 0)
-            n_blocks[tid] = ids[f][i] + 1
-        for f, t in tables.items():
-            # Spark reads its schema from this footer key, so it must list
-            # the column too
-            meta = dict(t.schema.metadata)
-            spark_schema = json.loads(meta[_SPARK_ROW_META])
-            spark_schema["fields"].insert(1, {
-                "name": "block_id", "type": "integer", "nullable": False,
-                "metadata": {}})
-            meta[_SPARK_ROW_META] = json.dumps(spark_schema)
-            pq.write_table(t.add_column(
-                1, pa.field("block_id", pa.int32(), False),
-                [pa.array(ids[f], pa.int32())]).replace_schema_metadata(meta),
-                f)
-            crc = os.path.join(os.path.dirname(f),
-                               "." + os.path.basename(f) + ".crc")
-            if os.path.exists(crc):  # the local FS checks it on read
-                os.remove(crc)
-        offs = os.path.join(index_dir, f"block_offs{s}")
-        os.makedirs(offs)
-        pq.write_table(pa.table({
-            "term_id": pa.array(list(n_blocks), pa.int64()),
-            "n_blocks": pa.array(list(n_blocks.values()), pa.int32())}),
-            os.path.join(offs, "part-00000.parquet"))
-
-
-def test_parent_format_index_reads_appends_and_compacts(spark, tmp_path):
-    """An index whose postings still carry the per-term `block_id` column
-    stays fully usable: WAND and exhaustive answers are unchanged, and an
-    append (mixing old- and new-shape epochs), a tiered merge of an old
-    and a new epoch, and a full compaction each match a cold build."""
-    from elasticsearch_eslib_spark.plans.compact_index import (
-        compact_epochs, compact_index,
-    )
-
-    root = str(tmp_path)
-    a = _write_range(os.path.join(root, "a", "pages.parquet"), 0, 300)
-    b = _write_range(os.path.join(root, "b", "pages.parquet"), 300, 400)
-    c = _write_range(os.path.join(root, "c", "pages.parquet"), 400, 500)
-    abc = _write_range(os.path.join(root, "abc", "pages.parquet"), 0, 500)
-    idx_dir = os.path.join(root, "idx")
-    build_index(spark, a, idx_dir)
-    append_index(spark, b, idx_dir)
-    before_w = _url_scores(spark, idx_dir, "wand")
-    before_e = _url_scores(spark, idx_dir, "exhaustive")
-
-    _to_parent_format(idx_dir, ["", "_a1"])
-    for t in ("postings", "postings_a1"):
-        cols = spark.read.parquet(os.path.join(idx_dir, t)).columns
-        assert "block_id" in cols, t
-    assert _url_scores(spark, idx_dir, "wand") == before_w
-    assert _url_scores(spark, idx_dir, "exhaustive") == before_e
-
-    cold_dir = os.path.join(root, "idx_cold")
-    build_index(spark, abc, cold_dir)
-    cold = _url_scores(spark, cold_dir, "wand")
-
-    m = append_index(spark, c, idx_dir)
-    assert m.get("skipped") is not True and m["epoch"] == 2
-    assert _url_scores(spark, idx_dir, "wand") == cold
-    assert _url_scores(spark, idx_dir, "exhaustive") == cold
-
-    m = compact_epochs(spark, idx_dir, from_epoch=1)
-    assert m["merged_epochs"] == [1, 2]
-    assert _url_scores(spark, idx_dir, "wand") == cold
-    assert _url_scores(spark, idx_dir, "exhaustive") == cold
-
-    dst = os.path.join(root, "idx_full")
-    compact_index(spark, idx_dir, dst)
-    assert _url_scores(spark, dst, "wand") == cold
-    assert _url_scores(spark, dst, "exhaustive") == cold
 
 
 def test_compact_epochs_merges_small_suffix_in_place(spark, tmp_path):

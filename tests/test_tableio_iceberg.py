@@ -174,41 +174,21 @@ def test_iceberg_identifier_validation(spark, tmp_path):
 
 
 def test_parse_iso_tz_aware():
-    """Lineage timestamps parse as AWARE UTC in both layouts; unparseable
-    strings fall back to the aware epoch (never a naive datetime that a
-    non-UTC session would shift)."""
+    """Lineage timestamps parse as AWARE UTC; unparseable strings fall
+    back to the aware epoch (never a naive datetime that a non-UTC session
+    would shift)."""
     import datetime as dt
 
     from elasticsearch_eslib_spark.sources.tableio import (
         _parse_iso, _utcnow_iso,
     )
 
-    legacy = _parse_iso("2026-08-16T12:00:00Z")
     micro = _parse_iso("2026-08-16T12:00:00.654321Z")
-    assert legacy.tzinfo == dt.timezone.utc
     assert micro.tzinfo == dt.timezone.utc and micro.microsecond == 654321
     assert _parse_iso("garbage").tzinfo == dt.timezone.utc
     # round-trip of the current writer format
     now = _utcnow_iso()
     assert _parse_iso(now).strftime("%Y-%m-%dT%H:%M:%S.%fZ") == now
-
-
-def test_gc_skips_legacy_layout(spark, tmp_path):
-    """A manifest whose done lineage rows predate the data_dir layout must
-    NOT have its on-disk bucket dirs wiped by gc_unregistered: read() falls
-    back to the whole-table scan there, and done_partitions still reports
-    those buckets done — gc would orphan a resumed build."""
-    root = str(tmp_path / "legacy")
-    io = ManifestTableIO(spark, root)
-    df = spark.createDataFrame([(1, 0), (2, 1)], "doc_id long, bucket int")
-    df.write.partitionBy("bucket").parquet(io.table_path("tokenized"))
-    io.record_partitions("tokenized", FP, [
-        {"partition_id": 0}, {"partition_id": 1}])  # legacy: no data_dir
-    assert io.done_partitions("tokenized", FP) == {0, 1}
-    io.gc_unregistered("tokenized", "tokenized")
-    got = sorted(r["doc_id"] for r in io.read("tokenized").collect())
-    assert got == [1, 2]  # data survived; resume keeps skipping done buckets
-    assert io.done_partitions("tokenized", FP) == {0, 1}
 
 
 def test_manifest_crash_window_invisible(spark, tmp_path):
