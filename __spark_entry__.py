@@ -82,9 +82,9 @@ def _lifecycle_index(spark: SparkSession, sf_dir: str, mode: str) -> str:
 
     docs_path = f"{sf_dir}/documents.parquet"
     fp = fingerprint_path(docs_path)
-    # v3: the manifest format_version (INDEX_FORMAT.md); an index cached
+    # v4: the manifest format_version (INDEX_FORMAT.md); an index cached
     # under an older key has another format and would be refused
-    work = os.path.join(tempfile.gettempdir(), f"eslib_idx_v3_{fp}")
+    work = os.path.join(tempfile.gettempdir(), f"eslib_idx_v4_{fp}")
     index_dir = os.path.join(work, {"cold": "index", "appended": "index_app",
                                     "compacted": "index_cmp"}[mode])
     # gate on a marker written only after the FULL lifecycle finished —

@@ -87,9 +87,9 @@ def _gen_chunk(args) -> None:
 def ensure_index(spark, corpus: str, n_docs: int) -> str:
     from elasticsearch_eslib_spark.plans.build_index import build_index
 
-    # v3 suffix: the manifest format_version (INDEX_FORMAT.md) — an index
+    # v4 suffix: the manifest format_version (INDEX_FORMAT.md) — an index
     # cached under an older suffix has another format and is refused
-    index_dir = os.path.join(REPO, "BENCH", ".fixtures", f"index_{n_docs}_v3")
+    index_dir = os.path.join(REPO, "BENCH", ".fixtures", f"index_{n_docs}_v4")
     manifest = os.path.join(index_dir, "_manifest.json")
     done = False
     if os.path.exists(manifest):

@@ -36,8 +36,8 @@ def main() -> None:
                     help="merge only the trailing run of small epochs, "
                          "in place (needs --max-epoch-docs)")
     ap.add_argument("--max-epoch-docs", type=int, default=None,
-                    help="tiered mode: epochs at or below this many docs "
-                         "(stats n_new) are merge candidates")
+                    help="tiered mode: epochs that added at most this "
+                         "many docs are merge candidates")
     args = ap.parse_args()
 
     if args.tiered and args.max_epoch_docs is None:

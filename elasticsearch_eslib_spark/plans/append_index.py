@@ -16,9 +16,10 @@ to an existing index without touching any committed block:
   A4 postings_a{e}    delta postings only, salted/encoded/laid out exactly
                       like a build; raw (idf-free) block bounds under the
                       POST-append avgdl
-  stats_a{e}          n_docs/avg_dl totals + bound_avgdl = min over epochs
-                      of the avgdl blocks were encoded under — commits the
-                      epoch (Index ignores epochs without this stage)
+  stats_a{e}          no table: its stage metrics hold the n_docs/avg_dl
+                      totals + bound_avgdl = min over epochs of the avgdl
+                      blocks were encoded under — commits the epoch
+                      (build_index.epochs ignores epochs without it)
 
 A block is identified by (term_id, first_doc). Every delta doc id is
 above every existing one, so a term's delta blocks follow its existing
@@ -69,9 +70,7 @@ from elasticsearch_eslib_spark.operators.build import (
 from elasticsearch_eslib_spark.operators.ids import (
     assign_dense_ids, unpersist_ids,
 )
-from elasticsearch_eslib_spark.plans.build_index import (
-    committed_epochs, stats_frame,
-)
+from elasticsearch_eslib_spark.plans.build_index import epochs
 from elasticsearch_eslib_spark.sources.tableio import (
     fingerprint_path, open_tableio,
 )
@@ -90,31 +89,25 @@ def append_index(spark: SparkSession, pages_path: str,
     names, e.g. foreachBatch epoch redelivery)."""
     t_start = time.time()
     io = open_tableio(spark, index_dir)
-    epochs = committed_epochs(io)
+    ep = epochs(io.stages())
     fp_batch = batch_fingerprint or fingerprint_path(pages_path)
 
-    last_stats = f"stats_a{epochs[-1]}" if epochs else "stats"
-    for prev_e in reversed(epochs):
-        m_prev = io.stage_metrics(f"stats_a{prev_e}")
+    for prev_e in reversed(ep.numbers):
+        m_prev = ep.commits[prev_e]["metrics"]
         # merged_batch_fingerprints: a partially-compacted epoch carries
         # the fingerprints of every batch it absorbed (compact_epochs) —
         # redelivery of any of them must still be a no-op
-        stored = ([m_prev.get("batch_fingerprint")]
-                  + m_prev.get("merged_batch_fingerprints", []))
-        if fp_batch in stored:
+        if fp_batch in [m_prev["batch_fingerprint"],
+                        *m_prev.get("merged_batch_fingerprints", [])]:
             return {"skipped": True, "epoch": prev_e,
                     "wall_sec": time.time() - t_start}
 
-    e = len(epochs) + 1
+    e = len(ep.numbers) + 1
     sfx = f"_a{e}"
-    prev_postings = f"postings_a{epochs[-1]}" if epochs else "postings"
-    prev_terms = f"terms_a{epochs[-1]}" if epochs else "terms"
-    prev = io.read(last_stats).collect()[0]
-    n_prev = int(prev["n_docs"])
-    avgdl_prev = float(prev["avg_dl"])
-    bound_prev = float(prev["bound_avgdl"])
+    n_prev = int(ep.stats["n_docs"])
+    avgdl_prev = float(ep.stats["avg_dl"])
     # epoch chain: same batch against a different index state is a new epoch
-    fp = fp_batch + ":" + io.stage_snapshot(prev_postings)
+    fp = fp_batch + ":" + io.stage_snapshot(ep.tables["postings"][-1])
     metrics: dict = {"epoch": e, "batch_fingerprint": fp_batch}
 
     # ------------------------------------------------------------- A1
@@ -126,13 +119,12 @@ def append_index(spark: SparkSession, pages_path: str,
 
     # ------------------------------------------------------------- A2
     # ids continue after the existing MAX id (ids cover rejects too, so
-    # this is max(doc_id), not stats.n_docs): the previous epoch committed
-    # it as its max_doc_id stage metric — one metadata read, O(delta)
+    # this is max(doc_id), not n_docs): the previous epoch committed it
+    # as its max_doc_id stage metric — one metadata read, O(delta)
     st2 = f"docs{sfx}"
     s2_fp = fp + ":" + io.stage_snapshot(st1)
     if not io.is_done(st2, s2_fp):
-        prev_meta_stage = f"stats_a{epochs[-1]}" if epochs else "postings"
-        base_id = int(io.stage_metrics(prev_meta_stage)["max_doc_id"])
+        base_id = int(ep.stats["max_doc_id"])
         delta = assign_doc_ids(tokenized)
         sums = delta._dense_ids_sums  # noqa: SLF001
         n_new = int(sums["__ok"])
@@ -160,7 +152,7 @@ def append_index(spark: SparkSession, pages_path: str,
     st3 = f"terms{sfx}"
     s3_fp = s2_fp + ":" + io.stage_snapshot(st2)
     if not io.is_done(st3, s3_fp):
-        old = io.read(prev_terms)
+        old = io.read(ep.tables["terms"][-1])
         # delta vocabulary straight off the packed rows — no docs_delta
         # join on the vocab path (same shuffle-skip as the cold build's S3)
         vocab_d = term_freqs_nodoc(tokenized).groupBy("term").agg(
@@ -203,21 +195,16 @@ def append_index(spark: SparkSession, pages_path: str,
         io.commit_stage(st4, st4, delta_posts, s4_fp,
                         partition_by=["p_bucket"])
 
-    # ------------------------------------------------------- stats (commit)
+    # ------------------------------------------------------ epoch commit
     st5 = f"stats{sfx}"
     s5_fp = s4_fp + ":" + io.stage_snapshot(st4)
     if not io.is_done(st5, s5_fp):
-        import uuid as _uuid
-
-        snapshot = _uuid.uuid4().hex[:26]
-        bound = min(bound_prev, avgdl_tot) if n_tot else avgdl_tot
+        bound = min(float(ep.stats["bound_avgdl"]), avgdl_tot)
         io.commit_stage(
-            st5, st5,
-            stats_frame(spark, n_tot, avgdl_tot, bound, snapshot),
-            s5_fp, snapshot=snapshot,
-            metrics={"batch_fingerprint": fp_batch, "n_new": n_new,
-                     "n_docs": n_tot, "avg_dl": avgdl_tot,
-                     "max_doc_id": m2["max_doc_id"]})
+            st5, st5, None, s5_fp,
+            metrics={"n_docs": n_tot, "avg_dl": avgdl_tot,
+                     "bound_avgdl": bound, "max_doc_id": m2["max_doc_id"],
+                     "n_new": n_new, "batch_fingerprint": fp_batch})
 
     metrics.update({"n_new": n_new, "n_docs": n_tot, "avg_dl": avgdl_tot,
                     "wall_sec": time.time() - t_start})

@@ -9,7 +9,8 @@ Stage graph (each stage a committed table + manifest snapshot + lineage):
   S2 docs+tf    deterministic doc ids (E3 two-pass) → docs, term_freqs
   S3 terms      vocabulary + dense term ids (E5)
   S4 postings   salt → sort → encode blocks (E7–E9) → postings (bucketed
-                by term_id % 32 for query-time pruning) + stats
+                by term_id % 32 for query-time pruning); its stage metrics
+                hold the corpus stats (n_docs, avg_dl, bound_avgdl, ...)
 
 Stage-level resume: a stage whose manifest entry is 'done' for the same
 input fingerprint chain is skipped entirely. This mirrors Iceberg-snapshot
@@ -20,12 +21,11 @@ from __future__ import annotations
 
 import os
 import time
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from elasticsearch_eslib_spark.functions.planutil import (
-    local_frame, scan_partitions,
-)
+from elasticsearch_eslib_spark.functions.planutil import scan_partitions
 from elasticsearch_eslib_spark.operators.build import (
     assign_doc_ids, build_postings, build_terms,
     extract_analyze_tf, term_freqs, term_freqs_nodoc,
@@ -49,18 +49,6 @@ COMMIT_GROUP_BYTES = 512 << 20
 
 class BuildError(RuntimeError):
     pass
-
-
-def stats_frame(spark: SparkSession, n_docs: int, avg_dl: float,
-                bound_avgdl: float, snapshot: str) -> DataFrame:
-    """The one-row stats table (schemas.STATS columns), stamped now."""
-    import datetime as dt
-
-    return local_frame(
-        spark, [(n_docs, avg_dl, bound_avgdl,
-                 dt.datetime.now(dt.timezone.utc), snapshot)],
-        "n_docs long, avg_dl double, bound_avgdl double, "
-        "built_at timestamp, snapshot string")
 
 
 def _data_files(path: str) -> list[str]:
@@ -260,20 +248,16 @@ def build_index(spark: SparkSession, pages_path: str, index_dir: str,
         # partitioned by p_bucket and sorted, so the write is a
         # pass-through (operators/build.py)
         io.write_table("postings", postings, partition_by=["p_bucket"])
-        # stats carries the snapshot id it belongs to (schemas.STATS)
-        import uuid as _uuid2
-
-        snapshot = _uuid2.uuid4().hex[:26]
-        io.write_table("stats",
-                       stats_frame(spark, n_docs, avg_dl, avg_dl, snapshot))
+        # the base epoch's corpus stats (Epochs.stats): every block is
+        # encoded under this avg_dl, so bound_avgdl == avg_dl
         io.commit_stage("postings", "postings", None, s4_fp,
-                        snapshot=snapshot,
                         metrics={"n_docs": n_docs, "avg_dl": avg_dl,
+                                 "bound_avgdl": avg_dl,
                                  "max_doc_id": s2_metrics["max_doc_id"],
+                                 "n_new": n_docs,
+                                 "batch_fingerprint": fp_input,
                                  "wall_ms": int((time.time() - t0) * 1000)})
 
-    # n_docs/avg_dl come from the manifest metrics (the values the stats
-    # table holds): reading the table costs one more job at the build tail
     s2m = io.stage_metrics("docs_tf")
     metrics["n_docs"] = int(s2m["n_docs"])
     metrics["avg_dl"] = float(s2m["avg_dl"])
@@ -282,49 +266,65 @@ def build_index(spark: SparkSession, pages_path: str, index_dir: str,
     return metrics
 
 
+class Epochs(NamedTuple):
+    """An index's committed epochs, read off its stage entries. Epoch 0 is
+    the base build, epoch e >= 1 the e-th append; an epoch is visible once
+    its commit stage (`postings`, `stats_a{e}`) is done, so a crashed
+    append leaves no visible epoch. A commit stage's metrics hold the
+    corpus stats as of that epoch: n_docs, avg_dl, bound_avgdl (the least
+    avg_dl any visible block was encoded under), max_doc_id, n_new and
+    batch_fingerprint."""
+
+    numbers: list[int]             # committed appends, 1..k
+    tables: dict[str, list[str]]   # docs/terms/postings: per-epoch names
+    head: str                      # the newest epoch's commit stage
+    stats: dict                    # its metrics: the current corpus stats
+    commits: list[dict]            # every epoch's commit-stage entry
+
+    @property
+    def state(self) -> tuple:
+        """Identity of the committed content: the commit snapshots."""
+        return tuple(c["snapshot"] for c in self.commits)
+
+
+def epochs(stages: dict) -> Epochs:
+    """The committed epochs of an index whose TableIO `stages()` is
+    `stages`; raises LookupError when the base build never committed."""
+    def done(stage: str) -> bool:
+        return stages.get(stage, {}).get("status") == "done"
+
+    if not done("postings"):
+        raise LookupError("no committed index: stage 'postings' is not done")
+    marks = ["postings"]  # each epoch's commit stage, base first
+    while done(f"stats_a{len(marks)}"):
+        marks.append(f"stats_a{len(marks)}")
+    sfx = [""] + [f"_a{e}" for e in range(1, len(marks))]
+    commits = [stages[m] for m in marks]
+    return Epochs(
+        numbers=list(range(1, len(marks))),
+        tables={t: [t + x for x in sfx]
+                for t in ("docs", "terms", "postings")},
+        head=marks[-1], stats=commits[-1]["metrics"], commits=commits)
+
+
 class Index:
     """Loaded index handle for the query path.
 
     Incremental appends (plans/append_index.py) add per-epoch docs/postings
-    tables and a rewritten terms/stats; the handle presents the UNION so
-    the query path is epoch-oblivious."""
+    tables and a rewritten terms table; the handle presents the UNION so
+    the query path is epoch-oblivious, with the newest epoch's stats."""
 
     def __init__(self, spark: SparkSession, index_dir: str):
         from functools import reduce
 
         io = open_tableio(spark, index_dir)
-        epochs = committed_epochs(io)
-        suffixes = [""] + [f"_a{e}" for e in epochs]
+        ep = epochs(io.stages())
         self.docs = reduce(DataFrame.unionByName,
-                           [io.read(f"docs{s}") for s in suffixes])
-        self.terms = io.read(f"terms_a{epochs[-1]}" if epochs else "terms")
+                           map(io.read, ep.tables["docs"]))
+        self.terms = io.read(ep.tables["terms"][-1])
         self.postings = reduce(DataFrame.unionByName,
-                               [io.read(f"postings{s}") for s in suffixes])
-        row = io.read(f"stats_a{epochs[-1]}" if epochs else "stats").collect()[0]
-        self.n_docs = int(row["n_docs"])
-        self.avg_dl = float(row["avg_dl"])
-        self.bound_avgdl = float(row["bound_avgdl"])
+                               map(io.read, ep.tables["postings"]))
+        self.n_docs = int(ep.stats["n_docs"])
+        self.avg_dl = float(ep.stats["avg_dl"])
+        self.bound_avgdl = float(ep.stats["bound_avgdl"])
         self.io = io
-
-
-def _stage_done_any_fp(io, stage: str) -> bool:
-    """Stage committed under ANY fingerprint (TableIO-impl agnostic)."""
-    man = getattr(io, "manifest", None)
-    if man is not None:
-        return man["stages"].get(stage, {}).get("status") == "done"
-    try:
-        return bool(io.stage_snapshot(stage))
-    except Exception:
-        return False
-
-
-def committed_epochs(io) -> list[int]:
-    """Contiguous committed append epochs: epoch e counts only when its
-    FINAL stage (stats_a{e}) is done — a crashed append leaves no visible
-    epoch and is resumed or ignored."""
-    out: list[int] = []
-    e = 1
-    while _stage_done_any_fp(io, f"stats_a{e}"):
-        out.append(e)
-        e += 1
-    return out

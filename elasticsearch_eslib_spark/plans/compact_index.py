@@ -18,10 +18,10 @@ Invariants of the output:
   * the postings layout is a cold build's: a block is identified by
     (term_id, first_doc), files are p_bucket-partitioned and sorted by
     (term_id, first_doc);
-  * the output is a NEW index directory (docs/terms consolidated, stats
-    re-stamped, fresh manifest) — immutable-snapshot style: the caller
-    flips its pointer/symlink to the compacted dir, the only atomic swap
-    primitive that works on every store (and exactly how an Iceberg
+  * the output is a NEW index directory (docs/terms consolidated, corpus
+    stats re-stamped in a fresh manifest) — immutable-snapshot style: the
+    caller flips its pointer/symlink to the compacted dir, the only atomic
+    swap primitive that works on every store (and exactly how an Iceberg
     catalog pointer swap behaves); appends continue on it from epoch 1.
 
 Scale: one decode+encode pass over the postings — the same cost profile
@@ -38,9 +38,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from elasticsearch_eslib_spark.config import HEAD_DF_THRESHOLD, N_SALTS
 from elasticsearch_eslib_spark.operators.build import encode_enriched
 from elasticsearch_eslib_spark.operators.query import decode_blocks
-from elasticsearch_eslib_spark.plans.build_index import (
-    Index, committed_epochs, stats_frame,
-)
+from elasticsearch_eslib_spark.plans.build_index import Index, epochs
 from elasticsearch_eslib_spark.sources.tableio import (
     _utcnow_iso, open_tableio,
 )
@@ -68,17 +66,6 @@ def _reenrich(postings: DataFrame, terms: DataFrame,
                     .otherwise(F.lit(0)).alias("salt")))
 
 
-def _index_state(spark: SparkSession, src_dir: str) -> tuple:
-    """Identity of the source index's committed content: the base postings
-    snapshot plus every committed epoch's stats snapshot. Metadata only —
-    re-derived from a FRESH TableIO so a concurrent writer's manifest
-    replace is observed."""
-    io = open_tableio(spark, src_dir)
-    epochs = committed_epochs(io)
-    return (io.stage_snapshot("postings"),
-            tuple((e, io.stage_snapshot(f"stats_a{e}")) for e in epochs))
-
-
 def compact_index(spark: SparkSession, src_dir: str, dst_dir: str,
                   pre_commit_hook=None) -> dict:
     """Compact `src_dir` (any number of epochs) into fresh `dst_dir`.
@@ -91,43 +78,40 @@ def compact_index(spark: SparkSession, src_dir: str, dst_dir: str,
     compact can never shadow committed epochs. `pre_commit_hook` is a test
     seam injected between the rewrite and the conflict check."""
     t0 = time.time()
-    state0 = _index_state(spark, src_dir)
     idx = Index(spark, src_dir)
+    ep = epochs(idx.io.stages())
     n_docs, avg_dl = idx.n_docs, idx.avg_dl
-    src_epochs = committed_epochs(idx.io)
-    meta_stage = f"stats_a{src_epochs[-1]}" if src_epochs else "postings"
-    max_doc_id = idx.io.stage_metrics(meta_stage)["max_doc_id"]
 
     out = open_tableio(spark, dst_dir)
-    fp = "compact:" + idx.io.stage_snapshot("postings")
+    fp = "compact:" + ep.state[0]
     posts = encode_enriched(_reenrich(idx.postings, idx.terms, n_docs),
                             n_docs, avg_dl)
 
     out.write_table("docs", idx.docs)
     out.commit_stage("docs_tf", "docs", None, fp,
-                     metrics={"n_docs": n_docs, "avg_dl": avg_dl})
+                     metrics={"n_docs": n_docs, "avg_dl": avg_dl,
+                              "max_doc_id": ep.stats["max_doc_id"]})
     out.write_table("terms", idx.terms)
-    out.commit_stage("terms", "terms", None, fp)
+    out.commit_stage("terms", "terms", None, fp, metrics={
+        "n_terms": idx.io.stage_metrics(ep.tables["terms"][-1])["n_terms"]})
     # encode_enriched already emits p_bucket-partitioned, sorted blocks
     out.write_table("postings", posts, partition_by=["p_bucket"])
 
-    import uuid as _uuid
-
     if pre_commit_hook is not None:
         pre_commit_hook()
-    if _index_state(spark, src_dir) != state0:
+    # a FRESH TableIO, so a concurrent writer's manifest replace is seen
+    if epochs(open_tableio(spark, src_dir).stages()).state != ep.state:
         raise CompactionConflict(
             f"source index {src_dir} changed during compaction "
             "(append committed mid-run); rerun compaction")
 
-    snapshot = _uuid.uuid4().hex[:26]
     # bound_avgdl == avg_dl again: every block re-encoded under the
     # current stats — the WAND drift factor is exactly 1 post-compaction
-    out.write_table("stats",
-                    stats_frame(spark, n_docs, avg_dl, avg_dl, snapshot))
-    out.commit_stage("postings", "postings", None, fp, snapshot=snapshot,
+    out.commit_stage("postings", "postings", None, fp,
                      metrics={"n_docs": n_docs, "avg_dl": avg_dl,
-                              "max_doc_id": max_doc_id,
+                              "bound_avgdl": avg_dl,
+                              "max_doc_id": ep.stats["max_doc_id"],
+                              "n_new": n_docs, "batch_fingerprint": fp,
                               "compacted_from": src_dir})
     return {"n_docs": n_docs, "avg_dl": avg_dl,
             "wall_sec": time.time() - t0}
@@ -154,11 +138,11 @@ def compact_epochs(spark: SparkSession, index_dir: str,
     maintenance per invocation, unacceptable as the steady-state tightening
     pass at 10^12 docs where appends land as a stream of small epochs.
     This merges only the maximal SUFFIX of committed epochs whose size
-    (stats n_new) is ≤ `max_epoch_docs` (or everything from `from_epoch`
-    on), re-encoding just those deltas: per-term tail-block fragmentation
-    collapses where it actually accumulates, at O(merged deltas) cost. The
-    classic LSM/Lucene tiered-merge shape: K small segments → 1, big
-    segments untouched.
+    (commit metric n_new) is ≤ `max_epoch_docs` (or everything from
+    `from_epoch` on), re-encoding just those deltas: per-term tail-block
+    fragmentation collapses where it actually accumulates, at O(merged
+    deltas) cost. The classic LSM/Lucene tiered-merge shape: K small
+    segments → 1, big segments untouched.
 
     Invariants preserved (same argument as the full compaction docstring):
     doc_ids and term_ids never change; merged blocks are re-encoded under
@@ -189,52 +173,49 @@ def compact_epochs(spark: SparkSession, index_dir: str,
             "partial compaction needs a TableIO with an atomic multi-stage "
             "commit (ManifestTableIO.atomic_update; the Iceberg analog is "
             "a catalog transaction). Use compact_index for a full rewrite.")
-    epochs = committed_epochs(io)
-    k = epochs[-1] if epochs else 0
+    stages = io.stages()
+    ep = epochs(stages)
+    k = len(ep.numbers)
     if from_epoch is not None:
         j = from_epoch
         if j < 1 or j > k:
-            raise ValueError(f"from_epoch {j} outside committed epochs {epochs}")
+            raise ValueError(
+                f"from_epoch {j} outside committed epochs {ep.numbers}")
     else:
         if max_epoch_docs is None:
             raise ValueError("pass max_epoch_docs or from_epoch")
         j = k + 1
-        for e in reversed(epochs):
-            if io.stage_metrics(f"stats_a{e}")["n_new"] > max_epoch_docs:
+        for e in reversed(ep.numbers):
+            if ep.commits[e]["metrics"]["n_new"] > max_epoch_docs:
                 break
             j = e
     if k - j + 1 < 2:
         return {"skipped": True, "reason": "fewer than 2 epochs to merge",
-                "epochs": epochs, "wall_sec": time.time() - t0}
+                "epochs": ep.numbers, "wall_sec": time.time() - t0}
 
-    state0 = _index_state(spark, index_dir)
     suffix = list(range(j, k + 1))
-    last = io.read(f"stats_a{k}").collect()[0]
-    n_tot = int(last["n_docs"])
-    avgdl_tot = float(last["avg_dl"])
+    n_tot = int(ep.stats["n_docs"])
+    avgdl_tot = float(ep.stats["avg_dl"])
     # WAND bound for the epochs that SURVIVE untouched: the bound as of
     # epoch j-1 (they were encoded under avgdls ≥ that); merged blocks are
     # encoded under avgdl_tot
-    prev_stats = f"stats_a{j - 1}" if j > 1 else "stats"
-    bound_prev = float(io.read(prev_stats).collect()[0]["bound_avgdl"])
-    bound_new = min(bound_prev, avgdl_tot)
-
-    # exactly-once guard survival: collect every merged epoch's batch
-    # fingerprint (single + previously-merged lists)
-    merged_fps: list[str] = []
-    for e in suffix:
-        m = io.stage_metrics(f"stats_a{e}")
-        if m.get("batch_fingerprint"):
-            merged_fps.append(m["batch_fingerprint"])
-        merged_fps.extend(m.get("merged_batch_fingerprints", []))
+    bound_new = min(float(ep.commits[j - 1]["metrics"]["bound_avgdl"]),
+                    avgdl_tot)
+    merged = [ep.commits[e]["metrics"] for e in suffix]
+    # exactly-once guard survival: every batch the merged epochs absorbed
+    # (an earlier merge's list, or the epoch's own batch)
+    merged_fps = [f for m in merged
+                  for f in m.get("merged_batch_fingerprints")
+                  or [m["batch_fingerprint"]]]
+    docs_m = [stages[f"docs_a{e}"]["metrics"] for e in suffix]
 
     from functools import reduce
 
-    terms_latest = io.read(f"terms_a{k}")
+    terms_latest = io.read(ep.tables["terms"][-1])
     docs_merged = reduce(DataFrame.unionByName,
-                         [io.read(f"docs_a{e}") for e in suffix])
+                         [io.read(ep.tables["docs"][e]) for e in suffix])
     posts_suffix = reduce(DataFrame.unionByName,
-                          [io.read(f"postings_a{e}") for e in suffix])
+                          [io.read(ep.tables["postings"][e]) for e in suffix])
 
     # size the encode shuffle from the MERGED SUFFIX volume, not the total
     # corpus: encode_enriched's default derives task count from
@@ -246,9 +227,8 @@ def compact_epochs(spark: SparkSession, index_dir: str,
         TOKENS_PER_ENCODE_TASK,
     )
 
-    n_new_suffix = sum(io.stage_metrics(f"stats_a{e}")["n_new"]
-                       for e in suffix)
-    suffix_tokens = max(1, int(n_new_suffix * avgdl_tot))
+    n_new_merged = sum(m["n_new"] for m in merged)
+    suffix_tokens = max(1, int(n_new_merged * avgdl_tot))
     n_conf = int(spark.conf.get("spark.sql.shuffle.partitions"))
     n_enc = max(n_conf, (suffix_tokens + TOKENS_PER_ENCODE_TASK - 1)
                 // TOKENS_PER_ENCODE_TASK)
@@ -260,8 +240,7 @@ def compact_epochs(spark: SparkSession, index_dir: str,
     # ---- write the merged tables to fresh uniquely-named dirs (invisible
     # until the manifest swap; orphaned on crash/abort — gc'able)
     uid = _uuid.uuid4().hex[:10]
-    names = {t: f"{t}_a{j}__m{uid}"
-             for t in ("docs", "terms", "postings", "stats")}
+    names = {t: f"{t}_a{j}__m{uid}" for t in ("docs", "terms", "postings")}
 
     def _raw_write(dirname: str, df: DataFrame,
                    partition_by: list[str] | None = None) -> None:
@@ -275,13 +254,6 @@ def compact_epochs(spark: SparkSession, index_dir: str,
     # encode_enriched already emits p_bucket-partitioned, sorted blocks
     _raw_write(names["postings"], posts_new, partition_by=["p_bucket"])
 
-    snapshot = _uuid.uuid4().hex[:26]
-    _raw_write(names["stats"],
-               stats_frame(spark, n_tot, avgdl_tot, bound_new, snapshot))
-
-    max_doc_id = io.stage_metrics(f"stats_a{k}")["max_doc_id"]
-    n_new_merged = n_new_suffix  # already summed for the encode sizing
-
     if pre_commit_hook is not None:
         pre_commit_hook()
 
@@ -292,58 +264,55 @@ def compact_epochs(spark: SparkSession, index_dir: str,
                   for e in suffix for t in _epoch_stages(e)
                   if os.path.isdir(io.table_path(t))]
 
-    fp_merge = "pcompact:" + ":".join(
-        io.stage_snapshot(f"stats_a{e}") for e in suffix)
+    fp_merge = "pcompact:" + ":".join(ep.state[j:])
+    # the merged epoch's stages carry the metrics an append records
+    metrics = {
+        "docs": {"n_new": n_new_merged,
+                 "dl_new": sum(m["dl_new"] for m in docs_m),
+                 "base_id": docs_m[0]["base_id"],
+                 "max_doc_id": ep.stats["max_doc_id"]},
+        "terms": {"n_terms": stages[f"terms_a{k}"]["metrics"]["n_terms"]},
+        "postings": {},
+        "stats": {"n_docs": n_tot, "avg_dl": avgdl_tot,
+                  "bound_avgdl": bound_new,
+                  "max_doc_id": ep.stats["max_doc_id"],
+                  "n_new": n_new_merged, "batch_fingerprint": fp_merge,
+                  "merged_batch_fingerprints": merged_fps,
+                  "merged_epochs": suffix},
+    }
 
     def _mutate(man: dict) -> None:
         # re-verify the source state against the FRESH manifest: any
         # committed append (new epoch or changed snapshots) aborts
-        stages = man["stages"]
-
-        def snap(stage: str) -> str | None:
-            meta = stages.get(stage)
-            return meta["snapshot"] if meta and meta["status"] == "done" \
-                else None
-
-        fresh_epochs = []
-        e = 1
-        while snap(f"stats_a{e}") is not None:
-            fresh_epochs.append(e)
-            e += 1
-        fresh_state = (snap("postings"),
-                       tuple((x, snap(f"stats_a{x}")) for x in fresh_epochs))
-        if fresh_state != state0:
+        if epochs(man["stages"]).state != ep.state:
             raise CompactionConflict(
                 f"index {index_dir} changed during partial compaction "
                 "(append committed mid-run); rerun")
+        fresh = man["stages"]
         aliases = man.setdefault("aliases", {})
         for e2 in suffix:
             for t in _epoch_stages(e2):
-                stages.pop(t, None)
+                fresh.pop(t, None)
                 aliases.pop(t, None)
         man["lineage"] = [r for r in man["lineage"]
                           if not any(r.get("stage") == t
                                      for e2 in suffix
                                      for t in _epoch_stages(e2))]
-        for t, d in names.items():
+        snapshot = _uuid.uuid4().hex[:26]
+        for t, m in metrics.items():
             logical = f"{t}_a{j}"
-            aliases[logical] = d
-            stages[logical] = {
+            if t in names:
+                aliases[logical] = names[t]
+            fresh[logical] = {
                 "status": "done", "table": logical, "snapshot": snapshot,
                 "input_fingerprint": fp_merge, "wall_ms": 0,
-                "metrics": {}, "updated": _utcnow_iso(),
+                "metrics": m, "updated": _utcnow_iso(),
             }
-        stages[f"stats_a{j}"]["metrics"] = {
-            "n_docs": n_tot, "avg_dl": avgdl_tot, "max_doc_id": max_doc_id,
-            "n_new": n_new_merged,
-            "merged_batch_fingerprints": merged_fps,
-            "merged_epochs": suffix,
-        }
 
     try:
         io.atomic_update(_mutate)
     except CompactionConflict:
-        for t, d in names.items():  # reclaim the invisible merge output
+        for d in names.values():  # reclaim the invisible merge output
             shutil.rmtree(os.path.join(io.root, d), ignore_errors=True)
         raise
     for d in stale_dirs:  # post-commit gc; crash here leaves only orphans

@@ -43,23 +43,13 @@ POSTINGS = T.StructType([
     # avgdl of the build/append epoch that wrote the block. The query path
     # derives the WAND skipping bound as
     #   raw · idf(N_now, df_now) · max(1, avgdl_now / bound_avgdl)
-    # so incremental appends update stats/df WITHOUT touching any
+    # so incremental appends update corpus stats/df WITHOUT touching any
     # existing block (the factor keeps the bound an upper bound whichever
     # way avgdl drifted; see plans/append_index.py).
     T.StructField("block_max_raw", T.DoubleType(), False),
     T.StructField("doc_deltas", T.BinaryType(), False),
     T.StructField("tfs", T.BinaryType(), False),
     T.StructField("dls", T.BinaryType(), False),
-])
-
-STATS = T.StructType([
-    T.StructField("n_docs", T.LongType(), False),
-    T.StructField("avg_dl", T.DoubleType(), False),
-    # min over all build/append epochs of the avgdl their blocks were
-    # encoded under — the denominator of the WAND bound-drift factor
-    T.StructField("bound_avgdl", T.DoubleType(), False),
-    T.StructField("built_at", T.TimestampType(), False),
-    T.StructField("snapshot", T.StringType(), False),
 ])
 
 LINEAGE = T.StructType([

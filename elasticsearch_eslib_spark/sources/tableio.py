@@ -2,7 +2,7 @@
 
 BASELINE.json requires "resumable from Iceberg-snapshot checkpoints with
 per-partition lineage and metrics". IO goes through ONE interface
-(read / write_table / commit_group / commit_stage / is_done /
+(read / write_table / commit_group / commit_stage / stages / is_done /
 done_partitions / lineage_df / reset_stage) with two implementations:
 
   * IcebergTableIO — root "iceberg://catalog.namespace"; stage tables are
@@ -105,14 +105,30 @@ def fingerprint_path(path: str) -> str:
 
 # The on-disk format every manifest is stamped with (INDEX_FORMAT.md).
 # A manifest with no stamp or another one is refused, never read.
-FORMAT_VERSION = 3
+FORMAT_VERSION = 4
 
 
 class IndexFormatError(RuntimeError):
     """An existing `_manifest.json` was written in another index format."""
 
 
-class ManifestTableIO:
+class _StageAccessors:
+    """Stage status read off `stages()`: {stage: {status, table, snapshot,
+    input_fingerprint, metrics, updated}}, one entry per committed stage."""
+
+    def is_done(self, stage: str, input_fingerprint: str) -> bool:
+        meta = self.stages().get(stage)
+        return bool(meta and meta["status"] == "done"
+                    and meta["input_fingerprint"] == input_fingerprint)
+
+    def stage_snapshot(self, stage: str) -> str:
+        return self.stages()[stage]["snapshot"]
+
+    def stage_metrics(self, stage: str) -> dict:
+        return self.stages()[stage]["metrics"]
+
+
+class ManifestTableIO(_StageAccessors):
     """Snapshot/lineage semantics over plain Parquet (Iceberg fallback)."""
 
     def __init__(self, spark: SparkSession, root: str):
@@ -148,16 +164,8 @@ class ManifestTableIO:
         alias = self.manifest.get("aliases", {}).get(name)
         return os.path.join(self.root, alias or name)
 
-    def is_done(self, stage: str, input_fingerprint: str) -> bool:
-        meta = self.manifest["stages"].get(stage)
-        return bool(meta and meta["status"] == "done"
-                    and meta["input_fingerprint"] == input_fingerprint)
-
-    def stage_snapshot(self, stage: str) -> str:
-        return self.manifest["stages"][stage]["snapshot"]
-
-    def stage_metrics(self, stage: str) -> dict:
-        return self.manifest["stages"][stage]["metrics"]
+    def stages(self) -> dict:
+        return self.manifest["stages"]
 
     def done_partitions(self, stage: str, input_fingerprint: str) -> set[int]:
         return {
@@ -203,8 +211,7 @@ class ManifestTableIO:
                      input_fingerprint: str, mode: str = "overwrite",
                      partition_by: list[str] | None = None,
                      lineage_rows: list[dict] | None = None,
-                     metrics: dict | None = None,
-                     snapshot: str | None = None) -> str:
+                     metrics: dict | None = None) -> str:
         """Write (df=None → data already written, just record) + snapshot."""
         t0 = time.time()
         if df is not None:
@@ -212,7 +219,7 @@ class ManifestTableIO:
             if partition_by:
                 writer = writer.partitionBy(*partition_by)
             writer.parquet(self.table_path(table))
-        snapshot = snapshot or uuid.uuid4().hex[:26]
+        snapshot = uuid.uuid4().hex[:26]
         self.manifest["stages"][stage] = {
             "status": "done",
             "table": table,
@@ -336,7 +343,7 @@ class _InjectedCrash(RuntimeError):
     """Raised by crash_before_record failure injection (tests only)."""
 
 
-class IcebergTableIO:
+class IcebergTableIO(_StageAccessors):
     """TableIO over an Iceberg catalog: root = "catalog.namespace".
 
     A commit group is ONE atomic Iceberg append whose snapshot summary
@@ -386,30 +393,20 @@ class IcebergTableIO:
     def read(self, name: str) -> DataFrame:
         return self.spark.table(self.table_path(name))
 
-    def _stage_rows(self) -> list:
+    def stages(self) -> dict:
+        """The newest `_stages` row per stage, as a manifest stage entry."""
         if not self._exists("_stages"):
-            return []
-        return (self.read("_stages")
-                .orderBy(F.col("updated").desc()).collect())
-
-    def is_done(self, stage: str, input_fingerprint: str) -> bool:
-        for r in self._stage_rows():  # newest first
-            if r["stage"] == stage:
-                return (r["status"] == "done"
-                        and r["input_fingerprint"] == input_fingerprint)
-        return False
-
-    def stage_snapshot(self, stage: str) -> str:
-        for r in self._stage_rows():  # newest first
-            if r["stage"] == stage:
-                return r["snapshot"]
-        raise KeyError(stage)
-
-    def stage_metrics(self, stage: str) -> dict:
-        for r in self._stage_rows():
-            if r["stage"] == stage:
-                return json.loads(r["metrics"])
-        raise KeyError(stage)
+            return {}
+        out: dict = {}
+        for r in (self.read("_stages")
+                  .orderBy(F.col("updated").desc()).collect()):
+            out.setdefault(r["stage"], {
+                "status": r["status"], "table": r["table"],
+                "snapshot": r["snapshot"],
+                "input_fingerprint": r["input_fingerprint"],
+                "metrics": json.loads(r["metrics"]),
+                "updated": r["updated"]})
+        return out
 
     @staticmethod
     def buckets_from_summaries(summaries: list[dict], stage: str,
@@ -478,12 +475,10 @@ class IcebergTableIO:
                      input_fingerprint: str, mode: str = "overwrite",
                      partition_by: list[str] | None = None,
                      lineage_rows: list[dict] | None = None,
-                     metrics: dict | None = None,
-                     snapshot: str | None = None) -> str:
+                     metrics: dict | None = None) -> str:
         if df is not None:
             self.write_table(table, df, partition_by)
-        if snapshot is None:
-            snapshot = self._last_snapshot_id(table) or uuid.uuid4().hex[:26]
+        snapshot = self._last_snapshot_id(table) or uuid.uuid4().hex[:26]
         row = [(stage, "done", table, str(snapshot), input_fingerprint,
                 json.dumps(metrics or {}), _utcnow_iso())]
         sdf = local_frame(
@@ -547,9 +542,8 @@ class IcebergTableIO:
         from elasticsearch_eslib_spark import schemas
 
         out = []
-        for r in self._stage_rows():
-            stage = r["stage"]
-            table = r["table"]
+        for stage, meta in self.stages().items():
+            table = meta["table"]
             if not self._exists(table):
                 continue
             snaps = self.spark.sql(

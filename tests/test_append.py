@@ -202,14 +202,14 @@ def test_compact_restores_cold_build_shape(spark, corpora, appended_index,
     [first_doc, last_doc] with full blocks except tails, and future
     appends continue on the compacted dir."""
     from elasticsearch_eslib_spark.plans.compact_index import compact_index
-    from elasticsearch_eslib_spark.plans.build_index import committed_epochs
+    from elasticsearch_eslib_spark.plans.build_index import epochs
     from elasticsearch_eslib_spark.sources.tableio import open_tableio
 
     dst = str(tmp_path_factory.mktemp("compacted") / "idx")
     before_w = _url_scores(spark, appended_index, "wand")
     compact_index(spark, appended_index, dst)
 
-    assert committed_epochs(open_tableio(spark, dst)) == []
+    assert epochs(open_tableio(spark, dst).stages()).numbers == []
     idx = Index(spark, dst)
     assert idx.bound_avgdl == idx.avg_dl
     # identical answers, including doc_id preservation
@@ -254,7 +254,7 @@ def test_empty_batch_append_is_noop(spark, tmp_path):
     """An all-rejects/empty batch must never commit an epoch (an empty
     postings table would be unreadable); the index stays fully queryable
     and a following REAL append lands normally."""
-    from elasticsearch_eslib_spark.plans.build_index import committed_epochs
+    from elasticsearch_eslib_spark.plans.build_index import epochs
     from elasticsearch_eslib_spark.sources.tableio import open_tableio
 
     base = _write_custom(str(tmp_path / "base" / "pages.parquet"),
@@ -266,7 +266,7 @@ def test_empty_batch_append_is_noop(spark, tmp_path):
     build_index(spark, base, idx_dir)
     m = append_index(spark, empty, idx_dir)
     assert m["skipped"] is True and m["reason"] == "empty_batch"
-    assert committed_epochs(open_tableio(spark, idx_dir)) == []
+    assert epochs(open_tableio(spark, idx_dir).stages()).numbers == []
     assert Index(spark, idx_dir).n_docs == 40
     m2 = append_index(spark, real, idx_dir)
     assert m2.get("skipped") is not True and m2["epoch"] == 1
@@ -442,7 +442,7 @@ def test_compact_aborts_on_concurrent_append(spark, tmp_path):
         compact_index(spark, idx_dir, dst,
                       pre_commit_hook=lambda: append_index(
                           spark, c, idx_dir))
-    with pytest.raises(Exception):  # dst has no committed stats/postings
+    with pytest.raises(LookupError):  # dst has no committed postings
         Index(spark, dst)
 
     # the mid-run append committed normally on the source; a rerun of the
@@ -459,7 +459,7 @@ def test_compact_epochs_merges_small_suffix_in_place(spark, tmp_path):
     are identical before and after; epoch count drops to 1; both absorbed
     batch fingerprints survive for exactly-once redelivery; a later
     append continues as epoch 2 and matches a cold build."""
-    from elasticsearch_eslib_spark.plans.build_index import committed_epochs
+    from elasticsearch_eslib_spark.plans.build_index import epochs
     from elasticsearch_eslib_spark.plans.compact_index import compact_epochs
     from elasticsearch_eslib_spark.sources.tableio import open_tableio
 
@@ -484,7 +484,7 @@ def test_compact_epochs_merges_small_suffix_in_place(spark, tmp_path):
     assert m["merged_epochs"] == [1, 2] and m["into_epoch"] == 1
 
     io = open_tableio(spark, idx_dir)
-    assert committed_epochs(io) == [1]
+    assert epochs(io.stages()).numbers == [1]
     assert _url_scores(spark, idx_dir, "wand") == before_w
     assert _url_scores(spark, idx_dir, "exhaustive") == before_e
     idx = Index(spark, idx_dir)
@@ -508,7 +508,7 @@ def test_compact_epochs_merges_small_suffix_in_place(spark, tmp_path):
     # alias-redirected from the first merge)
     m3 = compact_epochs(spark, idx_dir, max_epoch_docs=500)
     assert m3.get("skipped") is not True and m3["into_epoch"] == 1
-    assert committed_epochs(open_tableio(spark, idx_dir)) == [1]
+    assert epochs(open_tableio(spark, idx_dir).stages()).numbers == [1]
     assert (_url_scores(spark, idx_dir, "wand")
             == _url_scores(spark, cold_dir, "wand"))
 
@@ -539,7 +539,7 @@ def test_compact_epochs_aborts_on_concurrent_append(spark, tmp_path):
     """The atomic manifest swap re-verifies the source state: an append
     committed mid-merge aborts the merge with the index unchanged (old
     epochs intact, new tables invisible), and a rerun then succeeds."""
-    from elasticsearch_eslib_spark.plans.build_index import committed_epochs
+    from elasticsearch_eslib_spark.plans.build_index import epochs
     from elasticsearch_eslib_spark.plans.compact_index import (
         CompactionConflict, compact_epochs,
     )
@@ -563,7 +563,7 @@ def test_compact_epochs_aborts_on_concurrent_append(spark, tmp_path):
     # (no aliases, all epochs intact) and the index still self-checks
     # (WAND == exhaustive over the 4-chunk corpus)
     io = open_tableio(spark, idx_dir)
-    assert committed_epochs(io) == [1, 2, 3]
+    assert epochs(io.stages()).numbers == [1, 2, 3]
     assert not io.manifest.get("aliases")
     assert Index(spark, idx_dir).n_docs == 600
     assert (_url_scores(spark, idx_dir, "wand")
@@ -572,5 +572,5 @@ def test_compact_epochs_aborts_on_concurrent_append(spark, tmp_path):
     # rerun over the settled index: merges all three small epochs
     m = compact_epochs(spark, idx_dir, max_epoch_docs=150)
     assert m["merged_epochs"] == [1, 2, 3] and m["into_epoch"] == 1
-    assert committed_epochs(open_tableio(spark, idx_dir)) == [1]
+    assert epochs(open_tableio(spark, idx_dir).stages()).numbers == [1]
     assert Index(spark, idx_dir).n_docs == 600

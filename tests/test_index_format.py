@@ -43,7 +43,8 @@ def _foreign_index(root: str, manifest: dict) -> str:
     return root
 
 
-@pytest.mark.parametrize("stamp", [None, 2], ids=["unstamped", "v2"])
+@pytest.mark.parametrize("stamp", [None, 2, 3],
+                         ids=["unstamped", "v2", "v3"])
 def test_other_format_refused_untouched(spark, tmp_path, built_index, stamp):
     """Every entry point raises IndexFormatError on a manifest with no
     stamp or another one, and leaves that directory (and a valid source)
@@ -79,5 +80,46 @@ def test_other_format_refused_untouched(spark, tmp_path, built_index, stamp):
     io = ManifestTableIO(spark, str(tmp_path / "fresh"))
     io.commit_stage("s", "s", None, "fp")
     with open(io.manifest_path) as fh:
-        assert json.load(fh)["format_version"] == FORMAT_VERSION == 3
+        assert json.load(fh)["format_version"] == FORMAT_VERSION == 4
     assert ManifestTableIO(spark, io.root).stage_snapshot("s")
+
+
+# the corpus stats an epoch's commit stage (`postings`, `stats_a{e}`) holds
+HEAD = {"n_docs", "avg_dl", "bound_avgdl", "max_doc_id", "n_new",
+        "batch_fingerprint"}
+# the metric keys a build or an append records per stage (epoch digits
+# dropped), besides wall_ms
+RECORDED = {
+    "tokenized": set(), "docs_tf": {"n_docs", "avg_dl", "max_doc_id"},
+    "terms": {"n_terms"}, "postings": HEAD,
+    "tokenized_a": set(), "docs_a": {"n_new", "dl_new", "base_id",
+                                     "max_doc_id"},
+    "terms_a": {"n_terms"}, "postings_a": set(), "stats_a": HEAD,
+}
+# what a compaction adds on top: where the merged content came from
+PROVENANCE = {"wall_ms", "compacted_from", "merged_epochs",
+              "merged_batch_fingerprints"}
+
+
+@pytest.mark.parametrize("writer", ["build", "append", "compact_epochs",
+                                    "compact_index"])
+def test_stage_metrics_match_build_and_append(lifecycle_indexes, writer):
+    """Every writer records, for each stage it commits, the metric keys a
+    build or an append records for that stage; the corpus stats sit on
+    each epoch's commit stage."""
+    import re
+
+    with open(os.path.join(lifecycle_indexes[writer],
+                           "_manifest.json")) as fh:
+        stages = json.load(fh)["stages"]
+    heads = {"build": ["postings"], "append": ["stats_a1", "stats_a2"],
+             "compact_epochs": ["stats_a1"],
+             "compact_index": ["postings"]}[writer]
+    assert [s for s in stages if s.startswith("stats_a")] == [
+        h for h in heads if h != "postings"]
+    for stage, meta in stages.items():
+        keys = set(meta["metrics"]) - PROVENANCE
+        assert keys == RECORDED[re.sub(r"\d+$", "", stage)], stage
+    for head in heads:
+        m = stages[head]["metrics"]
+        assert m["bound_avgdl"] <= m["avg_dl"] and m["n_new"] > 0, head

@@ -22,6 +22,8 @@ claim, checked against what Catalyst actually planned:
     one folded map literal, with no broadcast job, at any batch size;
   * a WAND request resolves on the driver: two collects, no local
     relation, four jobs;
+  * opening an index runs three jobs (the docs, terms and postings
+    schema reads) and no writer leaves a stats table;
   * build, append and compaction write one file per bucket dir, in
     write stages AQE sizes by the data;
   * bm25 df is a partial count per task before its exchange, never a
@@ -231,40 +233,23 @@ def _sorted_postings_files(table_dir: str) -> int:
     return n
 
 
-def test_postings_files_sorted_by_term_then_first_doc(spark, tmp_path):
+def test_postings_files_sorted_by_term_then_first_doc(spark,
+                                                     lifecycle_indexes):
     """Build, append, compact_epochs and compact_index all write postings
     files sorted by (term_id, first_doc): a term's blocks are contiguous
     and in doc order, and each row group's term_id min/max prunes."""
-    from elasticsearch_eslib_spark.fixtures import gen_pages_range
-    from elasticsearch_eslib_spark.plans.append_index import append_index
-    from elasticsearch_eslib_spark.plans.build_index import build_index
-    from elasticsearch_eslib_spark.plans.compact_index import (
-        compact_epochs, compact_index,
-    )
     from elasticsearch_eslib_spark.sources.tableio import open_tableio
 
-    pages = {}
-    for name, lo, hi in (("a", 0, 200), ("b", 200, 260), ("c", 260, 320)):
-        pages[name] = str(tmp_path / name)
-        spark.createDataFrame(gen_pages_range(lo, hi)).write.parquet(
-            pages[name])
-    idx_dir = str(tmp_path / "idx")
+    def table(writer: str, name: str) -> str:
+        return open_tableio(spark, lifecycle_indexes[writer]).table_path(name)
 
-    def table(name: str, index_dir: str = idx_dir) -> str:
-        return open_tableio(spark, index_dir).table_path(name)
-
-    build_index(spark, pages["a"], idx_dir)
-    assert _sorted_postings_files(table("postings")) > 0
-    append_index(spark, pages["b"], idx_dir)
-    append_index(spark, pages["c"], idx_dir)
+    assert _sorted_postings_files(table("build", "postings")) > 0
     for t in ("postings_a1", "postings_a2"):
-        assert _sorted_postings_files(table(t)) > 0, t
-    compact_epochs(spark, idx_dir, from_epoch=1)
-    assert not table("postings_a1").endswith("/postings_a1")  # merged
-    assert _sorted_postings_files(table("postings_a1")) > 0
-    dst = str(tmp_path / "idx_full")
-    compact_index(spark, idx_dir, dst)
-    assert _sorted_postings_files(table("postings", dst)) > 0
+        assert _sorted_postings_files(table("append", t)) > 0, t
+    merged = table("compact_epochs", "postings_a1")
+    assert not merged.endswith("/postings_a1")  # an alias to the merge
+    assert _sorted_postings_files(merged) > 0
+    assert _sorted_postings_files(table("compact_index", "postings")) > 0
 
 
 def test_writes_sized_by_data_one_file_per_bucket(spark, tmp_path,
@@ -544,6 +529,32 @@ def test_wand_request_resolves_on_the_driver(spark, built_index,
         sc.setLocalProperty("spark.jobGroup.id", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
     assert len(sc.statusTracker().getJobIdsForGroup("wand-request")) == 4
+
+
+def test_index_open_runs_no_stats_job(spark, built_index,
+                                      lifecycle_indexes):
+    """Opening an index reads its corpus stats from the manifest: the
+    only Spark jobs are the three schema reads of docs, terms and
+    postings. No writer leaves a stats table behind."""
+    import os
+
+    from elasticsearch_eslib_spark.plans.build_index import Index
+
+    sc = spark.sparkContext
+    sc.setJobGroup("index-open", "index-open")
+    try:
+        idx = Index(spark, built_index[0])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
+    assert len(sc.statusTracker().getJobIdsForGroup("index-open")) == 3
+    assert idx.n_docs == built_index[1]["n_docs"]
+    assert idx.bound_avgdl == idx.avg_dl
+    for writer, index_dir in [("built_index", built_index[0]),
+                              *lifecycle_indexes.items()]:
+        stats_dirs = [d for d in os.listdir(index_dir)
+                      if d.startswith("stats")]
+        assert stats_dirs == [], (writer, stats_dirs)
 
 
 def test_resolved_query_terms_are_local(spark, built_index, list_queries):

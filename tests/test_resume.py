@@ -102,8 +102,11 @@ def test_lineage_df_matches_declared_schema(spark, built_index):
     ldf = open_tableio(spark, index_dir).lineage_df()
     assert ldf.schema == schemas.LINEAGE
     assert ldf.count() > 0
-    stats = spark.read.parquet(os.path.join(index_dir, "stats"))
-    assert {f.name for f in schemas.STATS.fields} <= set(stats.columns)
+    # the corpus stats live in the postings stage's metrics, no table
+    stats = open_tableio(spark, index_dir).stage_metrics("postings")
+    assert {"n_docs", "avg_dl", "bound_avgdl", "max_doc_id", "n_new",
+            "batch_fingerprint"} <= set(stats)
+    assert stats["bound_avgdl"] == stats["avg_dl"]
 
 
 def test_resume_noop_when_complete(spark, pages_parquet, built_index):

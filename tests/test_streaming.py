@@ -168,7 +168,7 @@ def test_stream_index_append_builds_live_index(spark, tmp_path):
 
     from elasticsearch_eslib_spark.fixtures import gen_pages_range, gen_queries
     from elasticsearch_eslib_spark.plans.build_index import (
-        Index, build_index, committed_epochs,
+        Index, build_index, epochs,
     )
     from elasticsearch_eslib_spark.plans.run_queries import run_queries
     from elasticsearch_eslib_spark.sources.tableio import open_tableio
@@ -205,7 +205,7 @@ def test_stream_index_append_builds_live_index(spark, tmp_path):
 
     idx = Index(spark, live)
     assert idx.n_docs == 520
-    assert committed_epochs(open_tableio(spark, live)) == [1, 2]
+    assert epochs(open_tableio(spark, live).stages()).numbers == [1, 2]
 
     cold = str(tmp_path / "cold_idx")
     build_index(spark, full, cold)
@@ -224,7 +224,7 @@ def test_stream_index_append_builds_live_index(spark, tmp_path):
                              str(tmp_path / "stage"),
                              str(tmp_path / "ckpt")).start()
     q2.awaitTermination()
-    assert committed_epochs(open_tableio(spark, live)) == [1, 2]
+    assert epochs(open_tableio(spark, live).stages()).numbers == [1, 2]
     assert Index(spark, live).n_docs == 520
 
 
@@ -237,7 +237,7 @@ def test_index_append_sink_redelivery_no_duplicates(spark, tmp_path):
     fingerprint."""
     from elasticsearch_eslib_spark.fixtures import gen_pages_range
     from elasticsearch_eslib_spark.plans.build_index import (
-        Index, build_index, committed_epochs,
+        Index, build_index, epochs,
     )
     from elasticsearch_eslib_spark.sources.tableio import open_tableio
     from elasticsearch_eslib_spark.streaming.ingest import index_append_sink
@@ -254,10 +254,10 @@ def test_index_append_sink_redelivery_no_duplicates(spark, tmp_path):
     sink = index_append_sink(idx_dir, str(tmp_path / "stage"))
     sink(delta, 0)
     io = open_tableio(spark, idx_dir)
-    assert committed_epochs(io) == [1]
+    assert epochs(io.stages()).numbers == [1]
     assert Index(spark, idx_dir).n_docs == 320
 
     sink(delta, 0)  # redelivered epoch: same content, re-staged files
     io2 = open_tableio(spark, idx_dir)
-    assert committed_epochs(io2) == [1]
+    assert epochs(io2.stages()).numbers == [1]
     assert Index(spark, idx_dir).n_docs == 320

@@ -35,6 +35,9 @@ def _contract(io, spark, make_df):
     assert not io.is_done("tokenized", "other-fp")
     assert io.stage_snapshot("tokenized") == snap
     assert io.stage_metrics("tokenized")["n"] == 3
+    meta = io.stages()["tokenized"]
+    assert (meta["status"], meta["table"], meta["snapshot"],
+            meta["metrics"]) == ("done", "tokenized", snap, {"n": 3})
 
     # whole-table overwrite write + read
     io.write_table("docs", make_df([(7, 0)]))
