@@ -1,4 +1,4 @@
-.PHONY: dist test tier1 oracle bench bench-pairs scaling clean
+.PHONY: dist test tier1 oracle bench bench-pairs scaling loc clean
 
 dist:
 	rm -f dist/elasticsearch_eslib_spark.zip
@@ -35,6 +35,11 @@ bench-pairs:
 
 scaling:
 	python bench_scaling.py
+
+# line totals of the package and of its plans/ + sources/ (ROADMAP aim 2)
+loc:
+	@printf 'package           %s\n' "$$(cat $$(find elasticsearch_eslib_spark -name '*.py') | wc -l)"
+	@printf 'plans + sources   %s\n' "$$(cat $$(find elasticsearch_eslib_spark/plans elasticsearch_eslib_spark/sources -name '*.py') | wc -l)"
 
 clean:
 	rm -rf dist .pytest_cache tests/.fixtures BENCH/.fixtures

@@ -50,8 +50,8 @@ from elasticsearch_eslib_spark.operators.ids import assign_dense_ids
 TOKENIZED_SCHEMA = ("url string, lang string, doc_len int, "
                     "terms array<string>, tfs array<int>")
 
-# S4 encode-shuffle sizing: one task per this many corpus tokens (see
-# build_postings). ~8M tokens ≈ 5-6M tf rows ≈ 150-200 MB in-sort — fits
+# S4 encode-shuffle sizing: one task per this many tokens encoded (see
+# encode_enriched). ~8M tokens ≈ 5-6M tf rows ≈ 150-200 MB in-sort — fits
 # executor memory with headroom; measured on this box: per-doc build cost
 # rose 26% when tasks grew past ~13M rows (spill), flat below.
 TOKENS_PER_ENCODE_TASK = 8_000_000
@@ -104,8 +104,8 @@ def assign_doc_ids(tokenized: DataFrame) -> DataFrame:
     doc_meta = tokenized.select(
         "url", "lang", "doc_len",
         # piggy-backed stats: Σ indexable doc_len + indexable-doc count
-        # (rejects carry doc_len=-1 → excluded from both) — corpus_stats
-        # comes free with the id-counting pass, no extra job
+        # (rejects carry doc_len=-1 → excluded from both) — the corpus stats
+        # come free with the id-counting pass, no extra job
         F.greatest(F.col("doc_len"), F.lit(0)).alias("__dl_pos"),
         F.when(F.col("doc_len") >= 0, 1).otherwise(0).alias("__ok"))
     # persist_input=False: doc_meta is a trivial projection of the
@@ -171,14 +171,6 @@ def build_terms(tf: DataFrame) -> DataFrame:
     return terms
 
 
-def corpus_stats(docs: DataFrame) -> DataFrame:
-    """E6: (n_docs, avg_dl) over indexable docs (doc_len > 0 docs included;
-    empty docs count toward N with dl=0 — pinned, mirrored in oracle)."""
-    return docs.where(F.col("doc_len") >= 0).agg(
-        F.count("*").alias("n_docs"),
-        F.avg("doc_len").alias("avg_dl"))
-
-
 # terms-dimension rows the encode join may BROADCAST (~32 B/row packed →
 # ~64 MB, the session's autoBroadcastJoinThreshold). Below this the whole
 # vocabulary broadcasts; above it the join splits Zipf-style (see
@@ -236,7 +228,7 @@ def _enrich_with_terms(tf: DataFrame, terms: DataFrame,
 
 def build_postings(tf: DataFrame, terms: DataFrame,
                    n_docs: int, avg_dl: float,
-                   num_partitions: int | None = None,
+                   n_tokens: int | None = None,
                    head_df_threshold: int = HEAD_DF_THRESHOLD,
                    n_salts: int = N_SALTS,
                    n_terms: int | None = None,
@@ -284,37 +276,38 @@ def build_postings(tf: DataFrame, terms: DataFrame,
                              F.lit(n_salts - 1)))
                .otherwise(F.lit(0)).alias("salt"))
     )
-    return encode_enriched(enriched, n_docs, avg_dl, num_partitions)
+    return encode_enriched(enriched, n_docs, avg_dl, n_tokens)
 
 
 SALT_PACK = 256  # (term_id, salt) pack width; requires salt < 256
 
 
 def encode_enriched(enriched: DataFrame, n_docs: int, avg_dl: float,
-                    num_partitions: int | None = None) -> DataFrame:
+                    n_tokens: int | None = None) -> DataFrame:
     """E8+E9 over pre-enriched (term_id, doc_id, tf, dl, salt) rows —
     shared by the build path and compaction (plans/compact_index.py),
-    which re-encodes decoded postings without a terms/docs join."""
+    which re-encodes decoded postings without a terms/docs join.
+
+    `n_tokens` is the token volume being encoded (default n_docs · avg_dl,
+    the whole corpus); an append or a tiered compaction encodes only its
+    delta under whole-corpus stats and passes that delta's volume."""
     spark = enriched.sparkSession
-    if num_partitions is None:
-        # size the encode shuffle by DATA VOLUME, not core count: Σ doc_len
-        # (= n_docs · avg_dl, already known from S2) upper-bounds the tf
-        # rows; one task per ~TOKENS_PER_ENCODE_TASK keeps every
-        # sortWithinPartitions in memory (no spill) and the Python encode
-        # batches bounded — at any corpus size or executor count. The core
-        # count is only a floor so small corpora still use the machine.
-        n_conf = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        est_tokens = max(1, int(n_docs * avg_dl))
-        data_tasks = (est_tokens + TOKENS_PER_ENCODE_TASK - 1) \
-            // TOKENS_PER_ENCODE_TASK
-        # round UP to a multiple of the slot count: a task count like
-        # 25 on 8 slots runs as 3 full waves + a ONE-task straggler wave
-        # (packing 25/32 — measured as S4 scaling only 3.06× at 2v8);
-        # splitting the same data across 32 smaller tasks costs nothing
-        # (sorts stay in memory) and packs every wave. At cluster scale
-        # data_tasks ≫ slots and the rounding is negligible.
-        num_partitions = max(n_conf, -(-data_tasks // n_conf) * n_conf)
-    n_part = num_partitions
+    # size the encode shuffle by DATA VOLUME, not core count: the token
+    # count upper-bounds the tf rows; one task per ~TOKENS_PER_ENCODE_TASK
+    # keeps every sortWithinPartitions in memory (no spill) and the Python
+    # encode batches bounded — at any corpus size or executor count. The
+    # core count is only a floor so small inputs still use the machine.
+    n_conf = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    if n_tokens is None:
+        n_tokens = int(n_docs * avg_dl)
+    data_tasks = -(-max(1, n_tokens) // TOKENS_PER_ENCODE_TASK)
+    # round UP to a multiple of the slot count: a task count like 25 on 8
+    # slots runs as 3 full waves + a ONE-task straggler wave (packing
+    # 25/32 — measured as S4 scaling only 3.06× at 2v8); splitting the
+    # same data across 32 smaller tasks costs nothing (sorts stay in
+    # memory) and packs every wave. At cluster scale data_tasks ≫ slots
+    # and the rounding is negligible.
+    n_part = -(-data_tasks // n_conf) * n_conf
     # PACK the shuffle payload before the exchange: 5 columns → 3 longs.
     #   ts   = term_id·256 + salt   (salt < 256: N_SALTS is 16)
     #   tfdl = tf·2³² + dl

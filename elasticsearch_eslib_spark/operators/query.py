@@ -42,7 +42,6 @@ single-id list so it is not folded into `term_id = <literal>`.
 from __future__ import annotations
 
 import json
-import math
 from typing import NamedTuple
 
 import numpy as np
@@ -533,9 +532,3 @@ def topk_wand(queries: DataFrame, terms: DataFrame, postings: DataFrame,
             .select("query_id", F.col("rank").cast("int").alias("rank"),
                     "doc_id", "score"))
 
-
-def topk_score_math(n_docs: int, df: int, tf: int, dl: int, avg_dl: float) -> float:
-    """Scalar reference formula (used by tests to cross-check paths)."""
-    idf = math.log((n_docs - df + 0.5) / (df + 0.5) + 1.0)
-    return idf * tf * (BM25_K1 + 1.0) / (
-        tf + BM25_K1 * (1.0 - BM25_B + BM25_B * dl / avg_dl))

@@ -64,8 +64,8 @@ import time
 from pyspark.sql import SparkSession, functions as F
 
 from elasticsearch_eslib_spark.operators.build import (
-    TOKENS_PER_ENCODE_TASK, assign_doc_ids, build_postings,
-    extract_analyze_tf, term_freqs, term_freqs_nodoc,
+    assign_doc_ids, build_postings, extract_analyze_tf, term_freqs,
+    term_freqs_nodoc,
 )
 from elasticsearch_eslib_spark.operators.ids import (
     assign_dense_ids, unpersist_ids,
@@ -153,11 +153,13 @@ def append_index(spark: SparkSession, pages_path: str,
     s3_fp = s2_fp + ":" + io.stage_snapshot(st2)
     if not io.is_done(st3, s3_fp):
         old = io.read(ep.tables["terms"][-1])
+        # term ids are dense (1..n), so the prior max id is the prior terms
+        # stage's committed vocabulary count — no vocabulary scan
+        max_tid = int(io.stage_metrics(ep.tables["terms"][-1])["n_terms"])
         # delta vocabulary straight off the packed rows — no docs_delta
         # join on the vocab path (same shuffle-skip as the cold build's S3)
         vocab_d = term_freqs_nodoc(tokenized).groupBy("term").agg(
             F.count("*").alias("df_d"), F.sum("tf").alias("cf_d"))
-        max_tid = int(old.agg(F.max("term_id")).collect()[0][0] or 0)
         merged_known = (old.join(vocab_d, "term", "left")
                         .select("term_id", "term",
                                 (F.col("df")
@@ -171,8 +173,8 @@ def append_index(spark: SparkSession, pages_path: str,
         fresh_ids = (fresh_with
                      .withColumn("term_id", F.col("term_id") + max_tid)
                      .select("term_id", "term", "df", "cf"))
-        # merged vocab count = prior max id + fresh assignments (dense ids
-        # make the max a count); A4 sizes its terms join with it
+        # merged vocab count = prior max id + fresh assignments; A4 sizes
+        # its terms join with it
         io.commit_stage(
             st3, st3, merged_known.unionByName(fresh_ids), s3_fp,
             metrics={"n_terms":
@@ -184,12 +186,10 @@ def append_index(spark: SparkSession, pages_path: str,
     st4 = f"postings{sfx}"
     s4_fp = s3_fp + ":" + io.stage_snapshot(st3)
     if not io.is_done(st4, s4_fp):
-        n_conf = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        n_part = max(n_conf, (dl_new + TOKENS_PER_ENCODE_TASK - 1)
-                     // TOKENS_PER_ENCODE_TASK)
+        # the encode is sized by the delta's tokens, not the corpus's
         delta_posts = build_postings(
             term_freqs(tokenized, docs_delta), terms_merged,
-            n_tot, avgdl_tot, num_partitions=n_part,
+            n_tot, avgdl_tot, n_tokens=dl_new,
             n_terms=io.stage_metrics(st3)["n_terms"])
         # already p_bucket-partitioned and sorted: a pass-through write
         io.commit_stage(st4, st4, delta_posts, s4_fp,

@@ -40,13 +40,11 @@ from elasticsearch_eslib_spark.operators.build import encode_enriched
 from elasticsearch_eslib_spark.operators.query import decode_blocks
 from elasticsearch_eslib_spark.plans.build_index import Index, epochs
 from elasticsearch_eslib_spark.sources.tableio import (
-    _utcnow_iso, open_tableio,
+    IndexChanged, open_tableio,
 )
 
-
-class CompactionConflict(RuntimeError):
-    """An append committed to the source index while compaction ran; the
-    compacted output would silently drop that epoch — abort uncommitted."""
+# a compaction whose source index changed mid-run aborts uncommitted
+CompactionConflict = IndexChanged
 
 
 def _reenrich(postings: DataFrame, terms: DataFrame,
@@ -70,13 +68,13 @@ def compact_index(spark: SparkSession, src_dir: str, dst_dir: str,
                   pre_commit_hook=None) -> dict:
     """Compact `src_dir` (any number of epochs) into fresh `dst_dir`.
 
-    Single-writer by convention, VERIFIED at the commit point: the source
-    snapshot state captured at start is re-checked before the final commit
-    (and the caller should check again before flipping its pointer) — if an
-    append landed mid-compaction, CompactionConflict aborts with dst_dir
-    uncommitted (no postings stage → unreadable as an index), so a stale
-    compact can never shadow committed epochs. `pre_commit_hook` is a test
-    seam injected between the rewrite and the conflict check."""
+    The source's committed epochs captured at start are re-checked before
+    the final commit (and the caller should check again before flipping
+    its pointer): if an epoch committed or changed mid-compaction,
+    CompactionConflict (IndexChanged) aborts with dst_dir uncommitted (no
+    postings stage → unreadable as an index), so a stale compact can never
+    shadow committed epochs. `pre_commit_hook` is a test seam injected
+    between the rewrite and the conflict check."""
     t0 = time.time()
     idx = Index(spark, src_dir)
     ep = epochs(idx.io.stages())
@@ -122,11 +120,6 @@ def compact_index(spark: SparkSession, src_dir: str, dst_dir: str,
 # ---------------------------------------------------------------------------
 
 
-def _epoch_stages(e: int) -> list[str]:
-    return [f"tokenized_a{e}", f"docs_a{e}", f"terms_a{e}",
-            f"postings_a{e}", f"stats_a{e}"]
-
-
 def compact_epochs(spark: SparkSession, index_dir: str,
                    max_epoch_docs: int | None = None,
                    from_epoch: int | None = None,
@@ -154,13 +147,15 @@ def compact_epochs(spark: SparkSession, index_dir: str,
     so exactly-once append redelivery detection survives the merge.
 
     Atomicity: the merged tables are written to uniquely-named data dirs,
-    then ONE manifest replace (ManifestTableIO.atomic_update) points the
-    epoch-j table names at them via aliases, drops epochs j+1..k, and
-    re-verifies the source state — a concurrent committed append aborts
-    with CompactionConflict before anything becomes visible, and a crash
-    at any point leaves either the old or the new state, never a mix.
-    (On an Iceberg catalog the same commit is a multi-table transaction —
-    not wired here because the sandbox cannot run Iceberg end-to-end.)
+    then ONE manifest replace (ManifestTableIO.replace_stages) points the
+    epoch-j table names at them via aliases and drops epochs j+1..k. That
+    replace is staleness-checked like every other manifest write: if any
+    writer committed since this compaction read the index, it aborts with
+    CompactionConflict (IndexChanged) before anything becomes visible, and
+    a crash at any point leaves either the old or the new state, never a
+    mix. (On an Iceberg catalog the same commit is a multi-table
+    transaction — not wired here: IcebergTableIO is only contract-tested,
+    never run end-to-end.)
     """
     import os
     import shutil
@@ -168,10 +163,10 @@ def compact_epochs(spark: SparkSession, index_dir: str,
 
     t0 = time.time()
     io = open_tableio(spark, index_dir)
-    if not hasattr(io, "atomic_update"):
+    if not hasattr(io, "replace_stages"):
         raise RuntimeError(
             "partial compaction needs a TableIO with an atomic multi-stage "
-            "commit (ManifestTableIO.atomic_update; the Iceberg analog is "
+            "commit (ManifestTableIO.replace_stages; the Iceberg analog is "
             "a catalog transaction). Use compact_index for a full rewrite.")
     stages = io.stages()
     ep = epochs(stages)
@@ -217,42 +212,23 @@ def compact_epochs(spark: SparkSession, index_dir: str,
     posts_suffix = reduce(DataFrame.unionByName,
                           [io.read(ep.tables["postings"][e]) for e in suffix])
 
-    # size the encode shuffle from the MERGED SUFFIX volume, not the total
-    # corpus: encode_enriched's default derives task count from
-    # n_docs·avg_dl, which at a 10^12-doc steady state would schedule
-    # O(corpus/4M-token) near-empty tasks for a few small deltas —
-    # breaking the O(merged deltas) contract. Same sizing rule as
-    # append_index A4 (suffix docs × current avgdl ≈ suffix tokens).
-    from elasticsearch_eslib_spark.operators.build import (
-        TOKENS_PER_ENCODE_TASK,
-    )
-
-    n_new_merged = sum(m["n_new"] for m in merged)
-    suffix_tokens = max(1, int(n_new_merged * avgdl_tot))
-    n_conf = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    n_enc = max(n_conf, (suffix_tokens + TOKENS_PER_ENCODE_TASK - 1)
-                // TOKENS_PER_ENCODE_TASK)
     # decode ONLY the suffix epochs' blocks; re-salt under current global
-    # df; re-encode under current stats (same path as the full compaction)
+    # df; re-encode under current stats (same path as the full compaction).
+    # The encode shuffle is sized by the MERGED SUFFIX volume (suffix docs
+    # × current avgdl), not the corpus: O(merged deltas), like an append.
+    n_new_merged = sum(m["n_new"] for m in merged)
     posts_new = encode_enriched(_reenrich(posts_suffix, terms_latest, n_tot),
-                                n_tot, avgdl_tot, num_partitions=n_enc)
+                                n_tot, avgdl_tot,
+                                n_tokens=int(n_new_merged * avgdl_tot))
 
     # ---- write the merged tables to fresh uniquely-named dirs (invisible
     # until the manifest swap; orphaned on crash/abort — gc'able)
     uid = _uuid.uuid4().hex[:10]
     names = {t: f"{t}_a{j}__m{uid}" for t in ("docs", "terms", "postings")}
-
-    def _raw_write(dirname: str, df: DataFrame,
-                   partition_by: list[str] | None = None) -> None:
-        w = df.write.mode("error")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(os.path.join(io.root, dirname))
-
-    _raw_write(names["docs"], docs_merged)
-    _raw_write(names["terms"], terms_latest)
+    io.write_table(names["docs"], docs_merged)
+    io.write_table(names["terms"], terms_latest)
     # encode_enriched already emits p_bucket-partitioned, sorted blocks
-    _raw_write(names["postings"], posts_new, partition_by=["p_bucket"])
+    io.write_table(names["postings"], posts_new, partition_by=["p_bucket"])
 
     if pre_commit_hook is not None:
         pre_commit_hook()
@@ -260,8 +236,9 @@ def compact_epochs(spark: SparkSession, index_dir: str,
     # capture the CURRENT data dirs of everything the merge replaces —
     # after the swap these are garbage (alias targets included, so a
     # re-merge of an already-merged epoch cleans its previous target)
-    stale_dirs = [io.table_path(t)
-                  for e in suffix for t in _epoch_stages(e)
+    gone = [f"{t}_a{e}" for e in suffix
+            for t in ("tokenized", "docs", "terms", "postings", "stats")]
+    stale_dirs = [io.table_path(t) for t in gone
                   if os.path.isdir(io.table_path(t))]
 
     fp_merge = "pcompact:" + ":".join(ep.state[j:])
@@ -281,39 +258,13 @@ def compact_epochs(spark: SparkSession, index_dir: str,
                   "merged_epochs": suffix},
     }
 
-    def _mutate(man: dict) -> None:
-        # re-verify the source state against the FRESH manifest: any
-        # committed append (new epoch or changed snapshots) aborts
-        if epochs(man["stages"]).state != ep.state:
-            raise CompactionConflict(
-                f"index {index_dir} changed during partial compaction "
-                "(append committed mid-run); rerun")
-        fresh = man["stages"]
-        aliases = man.setdefault("aliases", {})
-        for e2 in suffix:
-            for t in _epoch_stages(e2):
-                fresh.pop(t, None)
-                aliases.pop(t, None)
-        man["lineage"] = [r for r in man["lineage"]
-                          if not any(r.get("stage") == t
-                                     for e2 in suffix
-                                     for t in _epoch_stages(e2))]
-        snapshot = _uuid.uuid4().hex[:26]
-        for t, m in metrics.items():
-            logical = f"{t}_a{j}"
-            if t in names:
-                aliases[logical] = names[t]
-            fresh[logical] = {
-                "status": "done", "table": logical, "snapshot": snapshot,
-                "input_fingerprint": fp_merge, "wall_ms": 0,
-                "metrics": m, "updated": _utcnow_iso(),
-            }
-
     try:
-        io.atomic_update(_mutate)
+        io.replace_stages(gone, {f"{t}_a{j}": m for t, m in metrics.items()},
+                          {f"{t}_a{j}": d for t, d in names.items()},
+                          fp_merge)
     except CompactionConflict:
         for d in names.values():  # reclaim the invisible merge output
-            shutil.rmtree(os.path.join(io.root, d), ignore_errors=True)
+            shutil.rmtree(io.table_path(d), ignore_errors=True)
         raise
     for d in stale_dirs:  # post-commit gc; crash here leaves only orphans
         shutil.rmtree(d, ignore_errors=True)

@@ -18,9 +18,12 @@ done_partitions / lineage_df / reset_stage) with two implementations:
     {stage → snapshot_id, input_fingerprint, metrics} and per-(stage,
     partition) lineage rows. A commit group writes to a uniquely-named
     subdirectory and becomes visible only when its lineage rows land in the
-    manifest (os.replace = the atomic commit point). The manifest carries
-    `format_version`; opening one with another version (or none) raises
-    IndexFormatError.
+    manifest. Every manifest write is one `atomic_update`, a locked
+    re-read that raises IndexChanged if another writer committed since
+    this handle last read, then an fsynced os.replace (the atomic commit
+    point); only this module builds or edits manifest entries. The
+    manifest carries `format_version`; opening one with another version
+    (or none) raises IndexFormatError.
 
 Resume contract (C3): a stage re-runs only if its recorded input
 fingerprint differs or its status is not 'done'; bucket-level stages
@@ -112,6 +115,11 @@ class IndexFormatError(RuntimeError):
     """An existing `_manifest.json` was written in another index format."""
 
 
+class IndexChanged(RuntimeError):
+    """Another writer committed to the index after this handle last read
+    or wrote its manifest; nothing was committed — reopen and rerun."""
+
+
 class _StageAccessors:
     """Stage status read off `stages()`: {stage: {status, table, snapshot,
     input_fingerprint, metrics, updated}}, one entry per committed stage."""
@@ -128,8 +136,25 @@ class _StageAccessors:
         return self.stages()[stage]["metrics"]
 
 
+def _stage_entry(table: str, input_fingerprint: str,
+                 metrics: dict | None = None, wall_ms: int = 0) -> dict:
+    """A done manifest stage entry under a fresh snapshot id."""
+    return {"status": "done", "table": table,
+            "snapshot": uuid.uuid4().hex[:26],
+            "input_fingerprint": input_fingerprint, "wall_ms": wall_ms,
+            "metrics": metrics or {}, "updated": _utcnow_iso()}
+
+
+def _lineage_row(row: dict, stage: str, input_fingerprint: str) -> dict:
+    return {"stage": stage, "input_fingerprint": input_fingerprint,
+            "status": "done", "updated": _utcnow_iso(), **row}
+
+
 class ManifestTableIO(_StageAccessors):
-    """Snapshot/lineage semantics over plain Parquet (Iceberg fallback)."""
+    """Snapshot/lineage semantics over plain Parquet (Iceberg fallback).
+
+    `manifest` is the manifest as this handle last read or wrote it;
+    every write goes through `atomic_update`."""
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
@@ -151,11 +176,32 @@ class ManifestTableIO(_StageAccessors):
                 "; rebuild this index with build_index")
         return manifest
 
-    def _save(self) -> None:
-        tmp = self.manifest_path + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(self.manifest, fh, indent=1, sort_keys=True)
-        os.replace(tmp, self.manifest_path)
+    def atomic_update(self, mutate) -> None:
+        """The one manifest write. Under an exclusive lock on
+        `_manifest.lock`, re-read `_manifest.json`: if another writer
+        replaced it since this handle last read or wrote it, raise
+        IndexChanged. Otherwise apply `mutate` to a copy, fsync it to a
+        temp file and os.replace it in (the atomic commit point), and
+        adopt it as this handle's manifest."""
+        import copy
+        import fcntl
+
+        with open(os.path.join(self.root, "_manifest.lock"), "a") as lock:
+            fcntl.flock(lock, fcntl.LOCK_EX)
+            if self._load() != self.manifest:
+                raise IndexChanged(
+                    f"{self.root}: another writer committed since this "
+                    "handle read the index; reopen it and rerun")
+            manifest = copy.deepcopy(self.manifest)
+            mutate(manifest)
+            text = json.dumps(manifest, indent=1, sort_keys=True)
+            tmp = self.manifest_path + ".tmp"
+            with open(tmp, "w") as fh:
+                fh.write(text)
+                fh.flush()
+                os.fsync(fh.fileno())
+            os.replace(tmp, self.manifest_path)
+            self.manifest = json.loads(text)
 
     def table_path(self, name: str) -> str:
         # alias indirection (partial compaction): a logical table name can
@@ -198,14 +244,13 @@ class ManifestTableIO(_StageAccessors):
     def reset_stage(self, stage: str, table: str) -> None:
         """Drop every trace of a stage (lineage rows, stage entry, data) —
         used when its input fingerprint changed and partial output from the
-        old input must not survive."""
+        old input must not survive. The data goes after the commit, so a
+        crash in between leaves only unreferenced files."""
         import shutil
 
-        self.manifest["lineage"] = [
-            r for r in self.manifest["lineage"] if r.get("stage") != stage]
-        self.manifest["stages"].pop(stage, None)
-        shutil.rmtree(self.table_path(table), ignore_errors=True)
-        self._save()
+        path = self.table_path(table)
+        self.replace_stages([stage], {}, {}, input_fingerprint="")
+        shutil.rmtree(path, ignore_errors=True)
 
     def commit_stage(self, stage: str, table: str, df: DataFrame | None,
                      input_fingerprint: str, mode: str = "overwrite",
@@ -219,36 +264,36 @@ class ManifestTableIO(_StageAccessors):
             if partition_by:
                 writer = writer.partitionBy(*partition_by)
             writer.parquet(self.table_path(table))
-        snapshot = uuid.uuid4().hex[:26]
-        self.manifest["stages"][stage] = {
-            "status": "done",
-            "table": table,
-            "snapshot": snapshot,
-            "input_fingerprint": input_fingerprint,
-            "wall_ms": int((time.time() - t0) * 1000),
-            "metrics": metrics or {},
-            "updated": _utcnow_iso(),
-        }
-        for row in lineage_rows or []:
-            row.setdefault("stage", stage)
-            row.setdefault("input_fingerprint", input_fingerprint)
-            row.setdefault("status", "done")
-            row.setdefault("updated", _utcnow_iso())
-            self.manifest["lineage"].append(row)
-        self._save()
-        return snapshot
+        entry = _stage_entry(table, input_fingerprint, metrics,
+                             int((time.time() - t0) * 1000))
 
-    def atomic_update(self, mutator) -> None:
-        """Apply `mutator(manifest_dict)` against a FRESHLY-LOADED manifest
-        and save in one atomic os.replace — the multi-stage commit point for
-        operations that must swap several tables/stages together (partial
-        compaction). Reloading first means a concurrent writer's committed
-        manifest is the base, never this process's stale in-memory copy;
-        the mutator is expected to re-verify its preconditions against the
-        fresh state and raise to abort."""
-        self.manifest = self._load()
-        mutator(self.manifest)
-        self._save()
+        def record(man: dict) -> None:
+            man["stages"][stage] = entry
+            man["lineage"] += [_lineage_row(r, stage, input_fingerprint)
+                               for r in lineage_rows or []]
+
+        self.atomic_update(record)
+        return entry["snapshot"]
+
+    def replace_stages(self, drop: list[str], commits: dict[str, dict],
+                       aliases: dict[str, str],
+                       input_fingerprint: str) -> None:
+        """ONE manifest commit that drops the stages in `drop` (entries,
+        lineage rows, aliases), points each table name in `aliases` at its
+        data dir and commits each stage in `commits` (stage → metrics) —
+        a multi-table swap (tiered compaction) readers see whole or not."""
+        def swap(man: dict) -> None:
+            names = man.setdefault("aliases", {})
+            for t in drop:
+                man["stages"].pop(t, None)
+                names.pop(t, None)
+            man["lineage"] = [r for r in man["lineage"]
+                              if r.get("stage") not in drop]
+            names.update(aliases)
+            for st, m in commits.items():
+                man["stages"][st] = _stage_entry(st, input_fingerprint, m)
+
+        self.atomic_update(swap)
 
     def record_partitions(self, stage: str, input_fingerprint: str,
                           rows: list[dict]) -> None:
@@ -256,20 +301,18 @@ class ManifestTableIO(_StageAccessors):
         The manifest write (os.replace) is the ATOMIC commit point: data
         files referenced by `data_dir` become visible to read() only here.
         `attempt` auto-increments per (stage, partition_id)."""
-        attempts: dict[int, int] = {}
-        for r in self.manifest["lineage"]:
-            if r.get("stage") == stage:
-                pid = r.get("partition_id", -1)
-                attempts[pid] = max(attempts.get(pid, 0), r.get("attempt", 1))
-        for row in rows:
-            row.setdefault("stage", stage)
-            row.setdefault("input_fingerprint", input_fingerprint)
-            row.setdefault("status", "done")
-            row.setdefault("updated", _utcnow_iso())
-            row.setdefault(
-                "attempt", attempts.get(row.get("partition_id", -1), 0) + 1)
-            self.manifest["lineage"].append(row)
-        self._save()
+        def record(man: dict) -> None:
+            attempts: dict[int, int] = {}
+            for r in man["lineage"]:
+                if r.get("stage") == stage:
+                    pid = r.get("partition_id", -1)
+                    attempts[pid] = max(attempts.get(pid, 0),
+                                        r.get("attempt", 1))
+            man["lineage"] += [_lineage_row(
+                {"attempt": attempts.get(r.get("partition_id", -1), 0) + 1,
+                 **r}, stage, input_fingerprint) for r in rows]
+
+        self.atomic_update(record)
 
     def lineage_df(self) -> DataFrame:
         """Lineage as a DataFrame — exactly schemas.LINEAGE."""

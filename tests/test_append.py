@@ -574,3 +574,80 @@ def test_compact_epochs_aborts_on_concurrent_append(spark, tmp_path):
     assert m["merged_epochs"] == [1, 2, 3] and m["into_epoch"] == 1
     assert epochs(open_tableio(spark, idx_dir).stages()).numbers == [1]
     assert Index(spark, idx_dir).n_docs == 600
+
+
+def _three_epoch_index(spark, root: str) -> str:
+    """build(0-300) + append(300-400) + append(400-500): epochs [1, 2]."""
+    idx_dir = os.path.join(root, "idx")
+    build_index(spark, _write_range(os.path.join(root, "a", "pages.parquet"),
+                                    0, 300), idx_dir)
+    for name, lo, hi in (("b", 300, 400), ("c", 400, 500)):
+        append_index(spark, _write_range(
+            os.path.join(root, name, "pages.parquet"), lo, hi), idx_dir)
+    return idx_dir
+
+
+def test_stale_handle_cannot_revert_a_tiered_compaction(spark, tmp_path):
+    """A manifest write through a handle opened before compact_epochs
+    committed raises IndexChanged instead of saving the handle's stale
+    copy: the compaction's aliases survive (the merged epochs' old dirs
+    are already deleted) and the index still reads, WAND == exhaustive."""
+    from elasticsearch_eslib_spark.plans.build_index import epochs
+    from elasticsearch_eslib_spark.plans.compact_index import compact_epochs
+    from elasticsearch_eslib_spark.sources.tableio import (
+        IndexChanged, open_tableio,
+    )
+
+    idx_dir = _three_epoch_index(spark, str(tmp_path))
+    stale = open_tableio(spark, idx_dir)
+    compact_epochs(spark, idx_dir, from_epoch=1)
+    with pytest.raises(IndexChanged):
+        stale.commit_stage("probe", "probe", None, "fp")
+
+    io = open_tableio(spark, idx_dir)
+    assert "probe" not in io.stages()
+    assert set(io.manifest["aliases"]) == {"docs_a1", "terms_a1",
+                                           "postings_a1"}
+    assert epochs(io.stages()).numbers == [1]
+    assert Index(spark, idx_dir).n_docs == 500
+    assert (_url_scores(spark, idx_dir, "wand")
+            == _url_scores(spark, idx_dir, "exhaustive"))
+
+
+def test_append_overtaken_by_tiered_compaction_reruns(spark, tmp_path,
+                                                      monkeypatch):
+    """An append whose index is compacted mid-run raises IndexChanged at
+    its next commit and leaves the index readable; rerun, it lands as
+    epoch 2 and answers like a cold build over the same docs."""
+    from elasticsearch_eslib_spark.plans import append_index as plan
+    from elasticsearch_eslib_spark.plans.build_index import epochs
+    from elasticsearch_eslib_spark.plans.compact_index import compact_epochs
+    from elasticsearch_eslib_spark.sources.tableio import (
+        IndexChanged, open_tableio,
+    )
+
+    root = str(tmp_path)
+    idx_dir = _three_epoch_index(spark, root)
+    d = _write_range(os.path.join(root, "d", "pages.parquet"), 500, 600)
+    extract = plan.extract_analyze_tf
+
+    def overtaken(pages):
+        compact_epochs(spark, idx_dir, from_epoch=1)
+        return extract(pages)
+
+    monkeypatch.setattr(plan, "extract_analyze_tf", overtaken)
+    with pytest.raises(IndexChanged):
+        append_index(spark, d, idx_dir)
+    monkeypatch.undo()
+    assert epochs(open_tableio(spark, idx_dir).stages()).numbers == [1]
+    assert Index(spark, idx_dir).n_docs == 500
+    assert (_url_scores(spark, idx_dir, "wand")
+            == _url_scores(spark, idx_dir, "exhaustive"))
+
+    m = append_index(spark, d, idx_dir)
+    assert m.get("skipped") is not True and m["epoch"] == 2
+    cold = os.path.join(root, "cold")
+    build_index(spark, _write_range(
+        os.path.join(root, "full", "pages.parquet"), 0, 600), cold)
+    assert (_url_scores(spark, idx_dir, "wand")
+            == _url_scores(spark, cold, "wand"))

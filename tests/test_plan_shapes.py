@@ -22,6 +22,7 @@ claim, checked against what Catalyst actually planned:
     one folded map literal, with no broadcast job, at any batch size;
   * a WAND request resolves on the driver: two collects, no local
     relation, four jobs;
+  * an append collects only its two dense-id offset passes;
   * opening an index runs three jobs (the docs, terms and postings
     schema reads) and no writer leaves a stats table;
   * build, append and compaction write one file per bucket dir, in
@@ -91,6 +92,36 @@ def test_postings_fetch_prunes_without_id_literals(spark, built_index,
     assert re.search(r"PushedFilters: \[.*In\(term_id", plan), plan
     assert re.search(r"term_id#\d+L INSET", plan), plan
     assert not re.search(r"term_id#\d+L = \d+|EqualTo\(term_id", plan), plan
+
+
+def test_append_collects_only_dense_id_offsets(spark, built_index,
+                                              tmp_path, monkeypatch):
+    """An append onto the fixture index runs two driver collects, the
+    dense-id offset passes of its doc ids and of its new term ids: the
+    prior max term id is the prior terms stage's committed n_terms
+    metric, never a scan of the vocabulary."""
+    import shutil
+
+    from elasticsearch_eslib_spark.fixtures import gen_pages_range
+    from elasticsearch_eslib_spark.plans.append_index import append_index
+
+    idx_dir = str(tmp_path / "idx")
+    shutil.copytree(built_index[0], idx_dir)
+    pages = str(tmp_path / "pages")
+    spark.createDataFrame(gen_pages_range(1000, 1060)).write.parquet(pages)
+    collects = []
+    cls = type(spark.range(1))
+    collect = cls.collect
+
+    def counted(self):
+        collects.append(self)
+        return collect(self)
+
+    monkeypatch.setattr(cls, "collect", counted)
+    m = append_index(spark, pages, idx_dir)
+    monkeypatch.undo()
+    assert m["epoch"] == 1 and m["n_new"] == 60
+    assert len(collects) == 2, collects
 
 
 def test_terms_lookup_is_pruned(spark, built_index):
